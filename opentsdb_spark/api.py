@@ -45,7 +45,9 @@ from opentsdb_spark.plans.limits import (
     enforce_data_point_limit, request_byte_limit, request_limit,
 )
 from opentsdb_spark.plans.planner import compile_query
-from opentsdb_spark.serializer import graph_ascii, serialize_subquery, subquery_echo
+from opentsdb_spark.serializer import (
+    graph_ascii, resolve_series, serialize_subquery, subquery_echo,
+)
 from opentsdb_spark.timeparse import parse_datetime_ms, parse_duration_ms
 
 
@@ -127,10 +129,16 @@ def handle_query(
     from opentsdb_spark.auth import check_query
 
     check_query(request, tsq)  # no-op unless an auth plugin is installed
-    out: list[dict[str, Any]] = []
-    # _now_ms pins 'now' for the DATA range too, not just the annotation
-    # window / scan budget below — otherwise a caller-pinned clock reads
-    # data and annotations from different windows
+    from opentsdb_spark.operators.annotations import annotations_in_range
+    from opentsdb_spark.parse import _flag
+    from opentsdb_spark.plans.limits import enforce_byte_budget, enforce_scan_budget
+
+    # _now_ms pins 'now' for the data range, the scan budget and the
+    # annotation window alike — otherwise a caller-pinned clock reads data
+    # and annotations from different windows
+    now_ms = request.get("_now_ms")
+    start_ms = parse_datetime_ms(tsq.start, tsq.timezone, now_ms)
+    end_ms = parse_datetime_ms(tsq.end, tsq.timezone, now_ms)
     # agg=none parity: the reference routes NONE around group-bys and emits
     # one SpanGroup PER SPAN (src/core/TsdbQuery.java:1006-1027 "The raw
     # aggregator skips group bys"), so ?m=none:metric over a multi-series
@@ -140,79 +148,50 @@ def handle_query(
     # serializes per series_id, matching that shape exactly
     # (test_tsd.py::test_none_multi_series_per_span). Callers wanting the
     # typo-proof rejection opt in with ?strict_none.
-    from opentsdb_spark.parse import _flag
-
-    compiled = compile_query(points, tsq, now_ms=request.get("_now_ms"),
+    compiled = compile_query(points, tsq, now_ms=now_ms,
                              histograms=histograms,
                              rollup_cfg=rollup_cfg, agg_tag=agg_tag,
                              strict_none=_flag(request, "strict_none"))
-    # budget enforcement runs FIRST — before the annotation semi-join below,
-    # which executes a real scan over each sub-query's source frame; an
-    # over-budget query must be rejected before ANY range-sized job runs
+    # ceilings resolve PER SUB-QUERY: a per-metric override
+    # (tsd.query.limits.overrides, QueryLimitOverride.java — regex on the
+    # metric name) beats the process default, and an explicit per-request
+    # max_* beats both
+    dp_limits = [request_limit(request, getattr(q, "metric", None)) for q in tsq.queries]
+    # the byte ceiling prices every scan from plan statistics alone
+    # (tsd.query.limits.bytes, SaltScanner.java:560-605), so an over-budget
+    # range is refused before any job runs
     for q, res in zip(tsq.queries, compiled):
-        if res.source_df is None:
-            continue
-        # ceilings resolve PER SUB-QUERY: a per-metric override
-        # (tsd.query.limits.overrides, QueryLimitOverride.java — regex on
-        # the metric name) beats the process default, and an explicit
-        # per-request max_* beats both
-        q_metric = getattr(q, "metric", None)
-        byte_limit = request_byte_limit(request, q_metric)
-        q_limit = request_limit(request, q_metric)
-        if byte_limit > 0:
-            # byte ceiling first: it prices the scan from plan statistics
-            # alone (tsd.query.limits.bytes, SaltScanner.java:560-605) —
-            # no job runs at all for an over-budget range
-            from opentsdb_spark.plans.limits import enforce_byte_budget
-
+        byte_limit = request_byte_limit(request, getattr(q, "metric", None))
+        if res.source_df is not None and byte_limit > 0:
             enforce_byte_budget(res.source_df, byte_limit)
-        if q_limit > 0:
-            # price the query BEFORE the expensive plan runs (the reference
-            # aborts mid-scan, TsdbQuery.java:527-536; see enforce_scan_budget)
-            from opentsdb_spark.plans.limits import enforce_scan_budget
-
-            s_ms = parse_datetime_ms(tsq.start, tsq.timezone, request.get("_now_ms"))
-            e_ms = parse_datetime_ms(tsq.end, tsq.timezone, request.get("_now_ms"))
-            enforce_scan_budget(res.source_df, q.downsample, s_ms, e_ms, q_limit)
+    # resolve -> budget -> one collect: one job per sub-query resolves its
+    # matched series (id, tags, point count); the exact scan budget, the
+    # annotation lookup and the serializer's tags/aggregateTags/TSUIDs all
+    # come from that result, and the data plan runs only once the budget
+    # has passed (the reference aborts mid-scan, TsdbQuery.java:527-536)
+    resolved = []
+    for q, res, q_limit in zip(tsq.queries, compiled, dp_limits):
+        series = None
+        if res.source_df is not None:
+            series = resolve_series(res.source_df)
+            enforce_scan_budget([s.points for s in series], q.downsample,
+                                start_ms, end_ms, q_limit)
+        resolved.append(series)
     ann_map: dict[str, list[dict[str, Any]]] | None = None
     globals_list: list[dict[str, Any]] | None = None
     if annotations is not None and not tsq.no_annotations:
-        from opentsdb_spark.operators.annotations import annotations_in_range
-
-        start_ms = parse_datetime_ms(tsq.start, tsq.timezone, request.get("_now_ms"))
-        end_ms = parse_datetime_ms(tsq.end, tsq.timezone, request.get("_now_ms"))
         ann_map = {}
         globals_list = [] if tsq.with_global_annotations else None
-        # push the identity filter into the FRAME: a broadcast semi-join
-        # against the query's matched-series ids means annotation cost
-        # scales with the matched series, not the global annotation table
-        # (which a dense deployment grows without bound). The broadcast
-        # side is the DISTINCT matched-series id set — bounded by series
-        # cardinality in range, not data volume; the budget checks above
-        # already rejected over-budget ranges before this job runs. Falls
-        # back to the fetch-all path only when no sub-query exposes a
-        # source frame.
-        from opentsdb_spark.sources.points import series_id_col
-
-        sid_frames = [
-            res.source_df.select(series_id_col("metric", "tags").alias("tsuid"))
-            for res in compiled
-            if res.source_df is not None
-        ]
-        tsuid_df = None
-        if sid_frames:
-            tsuid_df = sid_frames[0]
-            for f in sid_frames[1:]:
-                tsuid_df = tsuid_df.unionByName(f)
-        # fallback (tsuid_df None): tsuids=() + include_global=False applies
-        # no identity predicate at all — every overlapping note comes back
-        # and is routed driver-side, exactly the old behavior. With the
-        # frame, globals only ride along when actually requested.
-        rows = annotations_in_range(
-            annotations, start_ms, end_ms, tsuids=(),
-            include_global=tsuid_df is not None and bool(tsq.with_global_annotations),
-            tsuid_df=tsuid_df,
-        ).collect()
+        tsuids = tuple(sorted({s.tsuid for ss in resolved if ss for s in ss}))
+        if tsuids or tsq.with_global_annotations:
+            # the identity filter is a literal over the resolved ids, so the
+            # lookup reads only the annotation frame
+            rows = annotations_in_range(
+                annotations, start_ms, end_ms, tsuids=tsuids,
+                include_global=tsq.with_global_annotations,
+            ).collect()
+        else:
+            rows = []
         for r in rows:
             note = {
                 "tsuid": r["tsuid"],
@@ -223,23 +202,24 @@ def handle_query(
                 "custom": dict(r["custom"]) if r["custom"] else None,
             }
             if r["tsuid"] is None:
-                if globals_list is not None:
-                    globals_list.append(note)
+                globals_list.append(note)
             else:
                 ann_map.setdefault(r["tsuid"], []).append(note)
         if globals_list is not None:
             globals_list.sort(key=lambda n: n["startTime"])
+    out: list[dict[str, Any]] = []
     sub_stats: list[dict[str, Any]] = []
-    for sq_idx, (q, res) in enumerate(zip(tsq.queries, compiled)):
+    for sq_idx, (q, res, q_limit, matched) in enumerate(
+            zip(tsq.queries, compiled, dp_limits, resolved)):
         echo = subquery_echo(q) if tsq.show_query else None
         ts0 = time.monotonic()
         series = serialize_subquery(
-            res, tsq.ms_resolution,
-            request_limit(request, getattr(q, "metric", None)),
+            res, tsq.ms_resolution, q_limit,
             show_tsuids=tsq.show_tsuids, query_echo=echo,
             # per-query stats are attached after serialization timing is known
             stats=None,
             annotations_map=ann_map, global_annotations=globals_list,
+            series=matched,
         )
         elapsed_ms = (time.monotonic() - ts0) * 1000.0
         emitted = sum(len(s["dps"]) for s in series)
@@ -259,8 +239,6 @@ def handle_query(
                 s["__subquery_index"] = sq_idx
         sub_stats.append(st)
         out.extend(series)
-    from opentsdb_spark.parse import _flag
-
     if _flag(request, "arrays"):
         # as_arrays output: dps as [[ts, value], ...] — PRESENCE semantics
         # like every other query flag (a bare '?arrays' arrives as '',

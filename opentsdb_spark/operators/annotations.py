@@ -10,7 +10,9 @@ serialization layer (matching how HttpJsonSerializer attaches them).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark.sql import Column, DataFrame
 
 from opentsdb_spark.session import tiny_df
 from pyspark.sql import functions as F
@@ -110,39 +112,44 @@ def bulk_delete_annotations(
     return annotations.where(~(in_range & target))
 
 
+# characters written as \uXXXX escapes inside a SQL string literal: quotes
+# and backslashes could end or alter it, and ``$`` could start a ${...}
+# variable reference, which Spark's parser substitutes before lexing
+_SQL_UNSAFE = re.compile(r"[^A-Za-z0-9 ._\-=,{}]")
+
+
+def _sql_escape(m: re.Match) -> str:
+    b = m.group().encode("utf-16-be")
+    return "".join(f"\\u{b[i]:02x}{b[i + 1]:02x}" for i in range(0, len(b), 2))
+
+
+def _isin(col: str, values) -> Column:
+    """``col IN (values)`` parsed from one SQL string. ``Column.isin`` makes
+    one Py4J call per value (~0.5 ms each), so a request matching a thousand
+    series would spend more building the filter than running the lookup."""
+    lits = ",".join("'" + _SQL_UNSAFE.sub(_sql_escape, v) + "'" for v in values)
+    return F.expr(f"`{col}` IN ({lits})")
+
+
 def annotations_in_range(
     annotations: DataFrame,
     start_ms: int,
     end_ms: int,
     tsuids: tuple[str, ...] = (),
     include_global: bool = True,
-    tsuid_df: DataFrame | None = None,
 ) -> DataFrame:
     """Annotations overlapping [start, end] for the given series (and/or
-    global ones) — the /api/annotation query path.
-
-    ``tsuid_df`` (one column of series ids) pushes the identity filter into
-    the FRAME as a broadcast semi-join instead of a driver-side literal
-    list: /api/query hands the query's matched-series frame here so
-    annotation cost scales with the matched series, not the global
-    annotation table. The matched side is small post-aggregation output, so
-    the broadcast is bounded; global rows (tsuid NULL) union back in when
-    requested."""
+    global ones) — the /api/annotation query path, and /api/query's lookup
+    with the series ids its resolution matched. The identity filter is an
+    ``IN`` list of literals, so only the annotation frame is read. With
+    neither ``tsuids`` nor ``include_global`` no identity filter applies."""
     overlap = (F.unix_millis("start_time") <= end_ms) & (
         F.coalesce(F.unix_millis("end_time"), F.unix_millis("start_time")) >= start_ms
     )
     df = annotations.where(overlap)
-    if tsuid_df is not None:
-        ids = tsuid_df.select(
-            F.col(tsuid_df.columns[0]).alias("tsuid")
-        ).distinct()
-        matched = df.join(F.broadcast(ids), "tsuid", "semi")
-        if include_global:
-            matched = matched.unionByName(df.where(F.col("tsuid").isNull()))
-        return matched
     preds = []
     if tsuids:
-        preds.append(F.col("tsuid").isin(list(tsuids)))
+        preds.append(_isin("tsuid", tsuids))
     if include_global:
         preds.append(F.col("tsuid").isNull())
     if preds:

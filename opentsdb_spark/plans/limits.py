@@ -3,8 +3,10 @@
 Reference: byte / data-point ceilings abort over-large queries
 (src/core/TsdbQuery.java:527-536, src/query/QueryLimitOverride.java —
 per-metric overrides of tsd.query.limits.data_points / .bytes). On Spark
-the scan itself is distributed, so the guard protects the driver/collect
-side: count the result lazily and refuse before materializing.
+the scan itself is distributed, so the guards protect the driver/collect
+side: the byte ceiling is priced from plan statistics, the scan budget from
+the query's resolved series, and the data-point ceiling caps the one
+collect at n+1 rows.
 """
 
 from __future__ import annotations
@@ -141,18 +143,22 @@ def request_byte_limit(request: dict, metric: str | None = None) -> int:
     return base
 
 
-def enforce_data_point_limit(df: DataFrame, max_data_points: int) -> DataFrame:
+def enforce_data_point_limit(result: DataFrame | list, max_data_points: int):
     """Raise if the result exceeds the ceiling (0 = unlimited, the default,
-    matching tsd.query.limits defaults). Uses limit(n+1).count() so the scan
-    short-circuits instead of counting everything."""
+    matching tsd.query.limits defaults). ``result`` is either a DataFrame,
+    counted with limit(n+1).count() so the scan short-circuits, or the rows
+    a caller already collected with limit(n+1).collect()."""
     if max_data_points <= 0:
-        return df
-    n = df.limit(max_data_points + 1).count()
+        return result
+    if isinstance(result, list):
+        n = len(result)
+    else:
+        n = result.limit(max_data_points + 1).count()
     if n > max_data_points:
         raise QueryLimitExceeded(
             f"query would return more than {max_data_points} data points"
         )
-    return df
+    return result
 
 
 def estimate_scan_bytes(df: DataFrame) -> int:
@@ -198,36 +204,28 @@ _CAL_MS = {"m": 60_000, "h": 3_600_000, "d": 86_400_000, "w": 7 * 86_400_000,
            "n": 30 * 86_400_000, "y": 365 * 86_400_000}
 
 
-def enforce_scan_budget(source_df: DataFrame, downsample, start_ms: int,
+def enforce_scan_budget(series_points: list[int], downsample, start_ms: int,
                         end_ms: int, max_data_points: int) -> None:
     """Pre-execution budget check — the Spark analog of the reference
     aborting DURING the scan once too many cells stream back
     (src/core/TsdbQuery.java:527-536 wiring tsd.query.limits.data_points
-    into the scanner callbacks). On an immutable lake the query can be
-    priced BEFORE the expensive plan runs:
+    into the scanner callbacks). Pure arithmetic over the sub-query's
+    resolved series (``series_points``: the matched-point count of each
+    series, from the one series-resolution job), so the budget is exact
+    and runs no job of its own:
 
-      * scanned points: one cheap count over the filtered pre-aggregation
-        frame (column-pruned + predicate-pushed Parquet count — none of the
-        downstream grid/interpolation/aggregation work executes)
+      * scanned points: the sum of the per-series counts
       * output grid: for a fill-policy downsample the output is
-        series x buckets, which pure arithmetic bounds from the range and
-        interval — this catches the classic footgun (1s downsample with
-        fill=zero over a year = 31M rows per series from a handful of raw
-        points) that a post-hoc count only sees after building the grid
+        series x buckets, which the range and interval bound — this catches
+        the classic footgun (1s downsample with fill=zero over a year = 31M
+        rows per series from a handful of raw points) before the grid is
+        built
 
     ``downsample`` is the sub-query's DownsampleSpec (or None). Raises
     QueryLimitExceeded; 0 = unlimited (the reference's default)."""
     if max_data_points <= 0:
         return
-    from pyspark.sql import functions as F
-
-    from opentsdb_spark.sources.points import series_id_col
-
-    row = source_df.agg(
-        F.count("*").alias("n"),
-        F.approx_count_distinct(series_id_col("metric", "tags")).alias("s"),
-    ).first()
-    n_scanned, n_series = row["n"], row["s"]
+    n_scanned, n_series = sum(series_points), len(series_points)
     if n_scanned > max_data_points:
         raise QueryLimitExceeded(
             f"sorry, you have attempted to fetch more than our limit of "

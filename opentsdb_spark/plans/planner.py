@@ -36,9 +36,10 @@ class CompiledSubQuery:
     df: DataFrame
     group_tagks: tuple[str, ...]
     aggregator: str
-    # filtered pre-aggregation points (lazy plan) — lets the serializer
-    # derive aggregateTags (tag keys aggregated away), mirroring
-    # HttpJsonSerializer.java:771-816
+    # filtered pre-aggregation points (lazy plan) — resolved once per
+    # request into the matched series, from which the scan budget,
+    # annotations and aggregateTags/TSUIDs (HttpJsonSerializer.java:771-816)
+    # are derived
     source_df: DataFrame | None = None
 
 

@@ -8,17 +8,77 @@ src/tsd/HttpJsonSerializer.java:743-866): one object per result series:
      "dps": {"<epoch_sec>": value, ...}}   # chronological key order (:771)
 
 This is the API boundary — the one place results are collected to the
-driver (post-aggregation output is small by construction).
+driver (post-aggregation output is small by construction). A sub-query
+costs two jobs here: ``resolve_series`` (one row per matched series, from
+which the caller prices the budget and looks up annotations, and from which
+``tags``/``aggregateTags``/TSUIDs are derived) and the one collect of the
+data plan.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, NamedTuple
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opentsdb_spark.plans.limits import enforce_data_point_limit
 from opentsdb_spark.plans.planner import CompiledSubQuery
+from opentsdb_spark.sources.points import series_id_col
+
+
+class Series(NamedTuple):
+    """One source series a sub-query matched (the reference's TSMeta)."""
+
+    tsuid: str
+    metric: str
+    tags: dict[str, str]
+    points: int  # matched data points in the query range
+
+
+def resolve_series(source_df: DataFrame) -> list[Series]:
+    """The matched series of a sub-query's filtered pre-aggregation frame:
+    one small aggregate job, so every per-series fact of the request (scan
+    budget, aggregateTags, TSUIDs, annotation matches) comes from one pass."""
+    rows = (
+        source_df.groupBy("metric", series_id_col("metric", "tags").alias("tsuid"))
+        .agg(F.first("tags").alias("tags"), F.count("*").alias("points"))
+        .collect()
+    )
+    return [Series(r["tsuid"], r["metric"], dict(r["tags"] or {}), r["points"])
+            for r in rows]
+
+
+def _output_groups(
+    series: list[Series], group_tagks: tuple[str, ...]
+) -> dict[tuple, tuple[dict[str, str], list[str], list[str]]]:
+    """Output key -> (tags, aggregateTags, sorted TSUIDs). The tag partition
+    is the reference's SpanGroup.computeTags (src/core/SpanGroup.java:
+    348-386): a key whose value is IDENTICAL across every underlying series
+    that has it stays in ``tags``; a key seen with >= 2 values moves to
+    ``aggregateTags``."""
+    members: dict[tuple, list[Series]] = {}
+    for s in series:
+        key = (s.metric, *(s.tags.get(k) for k in group_tagks))
+        members.setdefault(key, []).append(s)
+    out = {}
+    for key, group in members.items():
+        values: dict[str, set[str]] = {}
+        for s in group:
+            for k, v in s.tags.items():
+                vs = values.setdefault(k, set())
+                if v is not None:
+                    vs.add(v)
+        tags = {k: next(iter(vs)) for k, vs in sorted(values.items()) if len(vs) == 1}
+        atags = sorted(k for k, vs in values.items() if len(vs) != 1)
+        out[key] = (tags, atags, sorted(s.tsuid for s in group))
+    return out
+
+
+def _spark_order(row) -> tuple:
+    """Sort key matching Spark's ascending orderBy: nulls first, strings in
+    code-point (UTF-8 byte) order."""
+    return tuple((v is not None, v) for v in row)
 
 
 def serialize_subquery(
@@ -30,6 +90,7 @@ def serialize_subquery(
     stats: dict[str, Any] | None = None,
     annotations_map: dict[str, list[dict[str, Any]]] | None = None,
     global_annotations: list[dict[str, Any]] | None = None,
+    series: list[Series] | None = None,
 ) -> list[dict[str, Any]]:
     """``show_tsuids`` adds the sorted TSUID list per output series
     (HttpJsonSerializer.java:766-776); ``query_echo`` is attached as the
@@ -37,104 +98,52 @@ def serialize_subquery(
     as the ``stats`` field when show_stats is set (:888-901);
     ``annotations_map`` (tsuid -> notes) attaches the notes of each output
     series' source TSUIDs, and ``global_annotations`` is repeated per
-    series — both matching HttpJsonSerializer.java:778-811."""
-    df = result.df
+    series — both matching HttpJsonSerializer.java:778-811. ``series`` is
+    the sub-query's ``resolve_series`` result when the caller already ran
+    it; otherwise it is resolved here.
+
+    The data plan runs once, as ``limit(n+1).collect()`` under a data-point
+    ceiling n (reference TsdbQuery.java:527-536 aborts over-limit queries
+    instead of OOMing the serving layer); the bounded rows are then sorted
+    on the driver in the order Spark's ``orderBy`` would give."""
     gk = list(result.group_tagks)
-    if result.aggregator == "none":
-        key_cols = ["series_id"]
-    else:
-        key_cols = ["metric", *gk]
-    out_df = df.withColumn("__t", F.unix_millis("ts")).select(
+    none = result.aggregator == "none"
+    key_cols = ["series_id"] if none else ["metric", *gk]
+    out_df = result.df.withColumn("__t", F.unix_millis("ts")).select(
         *key_cols, "metric", "__t", "value"
     )
-    # fail fast BEFORE materializing (reference TsdbQuery.java:527-536 aborts
-    # over-limit queries instead of OOMing the serving layer)
-    enforce_data_point_limit(out_df, max_data_points)
-    ordered = out_df.orderBy(*key_cols, "__t")
-    if max_data_points <= 0:
-        # UNLIMITED responses stream partition-by-partition instead of
-        # collecting: orderBy range-partitions + sorts, and toLocalIterator
-        # walks partitions in order, so global order is preserved while
-        # driver memory is bounded by one partition — the analog of the
-        # reference streaming its span iterator into the channel
-        rows = ordered.toLocalIterator()
+    if max_data_points > 0:
+        rows = out_df.limit(max_data_points + 1).collect()
     else:
-        rows = ordered.collect()
-    # per-output-series tag partition (reference SpanGroup.computeTags,
-    # src/core/SpanGroup.java:348-386): a key whose value is IDENTICAL
-    # across every underlying series that has it stays in `tags`; a key
-    # seen with >= 2 values moves to `aggregateTags`. One small aggregate
-    # over the scanned series set, grouped by the output key.
-    tag_info: dict[tuple, tuple[dict[str, str], list[str]]] = {}
-    if result.aggregator != "none" and result.source_df is not None:
-        ti_rows = (
-            result.source_df.select(
-                "metric",
-                *[F.col("tags")[k].alias(k) for k in gk],
-                F.explode(F.map_entries("tags")).alias("__e"),
-            )
-            .select(*key_cols, F.col("__e.key").alias("__k"),
-                    F.col("__e.value").alias("__v"))
-            .distinct()
-            .groupBy(*key_cols, "__k")
-            .agg(F.count_distinct("__v").alias("__n"), F.first("__v").alias("__v"))
-            .collect()
-        )
-        for tr in ti_rows:
-            t, a = tag_info.setdefault(tuple(tr[c] for c in key_cols), ({}, []))
-            if tr["__n"] == 1:
-                t[tr["__k"]] = tr["__v"]
-            else:
-                a.append(tr["__k"])
-    # per-output-series TSUID lists: distinct source series ids grouped by
-    # the output key — one extra small aggregate, only when requested
-    tsuid_map: dict[tuple, list[str]] = {}
-    need_tsuids = show_tsuids or annotations_map
-    if need_tsuids and result.aggregator != "none" and result.source_df is not None:
-        from opentsdb_spark.sources.points import series_id_col
-
-        sid_rows = (
-            result.source_df.select(
-                "metric",
-                *[F.col("tags")[k].alias(k) for k in gk],
-                series_id_col("metric", "tags").alias("__sid"),
-            )
-            .distinct()
-            .collect()
-        )
-        for r in sid_rows:
-            tsuid_map.setdefault(tuple(r[c] for c in key_cols), []).append(r["__sid"])
+        rows = out_df.collect()
+    enforce_data_point_limit(rows, max_data_points)
+    nk = len(key_cols)
+    rows.sort(key=lambda r: (*_spark_order(r[:nk]), r[nk + 1]))
+    groups = {}
+    if not none and result.source_df is not None:
+        if series is None:
+            series = resolve_series(result.source_df)
+        groups = _output_groups(series, result.group_tagks)
     out: list[dict[str, Any]] = []
     cur_key: tuple | None = None
     cur: dict[str, Any] | None = None
     for r in rows:
-        key = tuple(r[c] for c in key_cols)
+        key, metric, t, value = r[:nk], r[nk], r[nk + 1], r[nk + 2]
         if key != cur_key:
-            if result.aggregator == "none":
+            if none:
                 # one output series == one source series: its own full tag
                 # map, nothing aggregated (the group columns were never
                 # selected on this path — parse the canonical series id)
-                tags, atags = _tags_from_series_id(r["series_id"]), []
+                tags, atags, series_tsuids = _tags_from_series_id(key[0]), [], [key[0]]
             else:
-                t, a = tag_info.get(key, ({}, []))
-                tags, atags = t, sorted(a)
-            cur = {
-                "metric": r["metric"],
-                "tags": tags,
-                "aggregateTags": atags,
-                "dps": {},
-            }
+                tags, atags, series_tsuids = groups.get(key, ({}, [], []))
+            cur = {"metric": metric, "tags": tags, "aggregateTags": atags, "dps": {}}
             if query_echo is not None:
                 cur["query"] = query_echo
-            series_tsuids = (
-                [r["series_id"]]
-                if result.aggregator == "none"
-                else sorted(tsuid_map.get(key, []))
-            )
             if show_tsuids:
                 cur["tsuids"] = series_tsuids
             if annotations_map is not None:
-                notes = [n for t in series_tsuids for n in annotations_map.get(t, [])]
+                notes = [n for sid in series_tsuids for n in annotations_map.get(sid, [])]
                 cur["annotations"] = sorted(notes, key=lambda n: n["startTime"])
             if global_annotations is not None:
                 cur["globalAnnotations"] = global_annotations
@@ -142,9 +151,8 @@ def serialize_subquery(
                 cur["stats"] = stats
             out.append(cur)
             cur_key = key
-        t = r["__t"] if ms_resolution else r["__t"] // 1000
         assert cur is not None
-        cur["dps"][str(t)] = r["value"]
+        cur["dps"][str(t if ms_resolution else t // 1000)] = value
     return out
 
 

@@ -1,5 +1,7 @@
 """m= parser, gexp parser, API handlers, import/dump, limits tests."""
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -243,34 +245,86 @@ def test_limits(fixture_points):
         enforce_data_point_limit(fixture_points, 10)
 
 
-def test_scan_budget_rejects_before_execution(fixture_points):
-    """The pre-execution budget must reject an over-budget query from the
-    CHEAP pre-pass alone — a 1-second zero-filled downsample over the range
-    explodes to ~series x range_seconds output rows, which the grid
-    ARITHMETIC catches without ever building (or counting) that grid. A
-    sane grid passes; a raw scan bigger than the ceiling is also caught."""
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` submits (run under its own job group)."""
+    sc, group = spark.sparkContext, f"jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_budget_rejects_before_execution(spark, fixture_points):
+    """The budget is priced from the resolved series alone — a 1-second
+    zero-filled downsample over the range explodes to ~series x
+    range_seconds output rows, which the grid ARITHMETIC catches without
+    ever building (or counting) that grid. A sane grid passes; a raw scan
+    bigger than the ceiling is also caught; a rejected query runs no job
+    beyond the series resolution."""
     from opentsdb_spark.model import DownsampleSpec
     from opentsdb_spark.plans.limits import enforce_scan_budget
+    from opentsdb_spark.serializer import resolve_series
 
     start_ms, end_ms = EPOCH * 1000, (EPOCH + 10 * 86400) * 1000
     src = fixture_points.where(F.col("metric") == "sys.cpu.user")
-    # ~600 raw points, but a 1s fill=zero grid = 2 series x 864000 buckets
+    counts = [s.points for s in resolve_series(src)]
+    assert sorted(counts) == [300, 300]
+    # 600 raw points, but a 1s fill=zero grid = 2 series x 864001 buckets
     with pytest.raises(QueryLimitExceeded, match="grid"):
         enforce_scan_budget(
-            src, DownsampleSpec(1_000, "avg", fill="zero"), start_ms, end_ms, 100_000
+            counts, DownsampleSpec(1_000, "avg", fill="zero"), start_ms, end_ms, 100_000
         )
     # same query, 1h buckets: 2 x 241 clears the same ceiling
     enforce_scan_budget(
-        src, DownsampleSpec(3_600_000, "avg", fill="zero"), start_ms, end_ms, 100_000
+        counts, DownsampleSpec(3_600_000, "avg", fill="zero"), start_ms, end_ms, 100_000
     )
-    # raw scan over the ceiling is caught by the count pre-pass
+    # raw scan over the ceiling is caught from the summed counts
     with pytest.raises(QueryLimitExceeded, match="scan"):
-        enforce_scan_budget(src, None, start_ms, end_ms, 10)
-    # API path: the grid rejection fires through handle_query
+        enforce_scan_budget(counts, None, start_ms, end_ms, 10)
+    # API path: the grid rejection fires through handle_query, and the
+    # data plan never runs — only the resolution's jobs are submitted
     req = {"start": EPOCH, "end": EPOCH + 10 * 86400,
            "m": "sum:1s-avg-zero:sys.cpu.user", "max_data_points": 100_000}
-    with pytest.raises(QueryLimitExceeded):
-        api.handle_query(fixture_points, req)
+    compiled = api.compile_query(fixture_points, parse_query(req))
+
+    def rejected():
+        with pytest.raises(QueryLimitExceeded, match="grid"):
+            api.handle_query(fixture_points, req)
+
+    resolve_jobs = _jobs(spark, lambda: resolve_series(compiled[0].source_df))
+    assert _jobs(spark, rejected) <= resolve_jobs
+
+
+def _notes(spark, rows):
+    """Annotation frame of (tsuid, start second after EPOCH, description)."""
+    return spark.createDataFrame(
+        [(t, (EPOCH + s) * 1000, d) for t, s, d in rows],
+        "tsuid string, s long, description string",
+    ).select("tsuid", F.timestamp_millis("s").alias("start_time"),
+             F.lit(None).cast("timestamp").alias("end_time"), "description",
+             F.lit(None).cast("string").alias("notes"),
+             F.lit(None).cast("map<string,string>").alias("custom"))
+
+
+def test_query_job_count(spark, fixture_points):
+    """One resolve and one data collect per sub-query: a grouped, zero-filled
+    downsample with annotations submits at most 3 jobs beyond the data plan's
+    own collect (the resolution's aggregate and the annotation lookup)."""
+    anns = _notes(spark, [("sys.cpu.user{dc=lga,host=web01}", 60, "deploy")])
+    req = {"start": EPOCH, "end": EPOCH + 10_000,
+           "m": "sum:10m-avg-zero:sys.cpu.user{host=*}"}
+    compiled = api.compile_query(fixture_points, parse_query(req))
+    out = api.handle_query(fixture_points, req, annotations=anns)  # warm
+    assert [a["description"] for a in out[0]["annotations"]] == ["deploy"]
+    data_jobs = _jobs(spark, compiled[0].df.collect)
+    query_jobs = _jobs(
+        spark, lambda: api.handle_query(fixture_points, req, annotations=anns))
+    assert query_jobs <= data_jobs + 3
 
 
 def test_byte_budget_prices_from_plan_stats(spark, fixture_points, tmp_path):
@@ -308,7 +362,28 @@ def test_byte_budget_prices_from_plan_stats(spark, fixture_points, tmp_path):
     assert tracker.getJobIdsForGroup(None) == before
 
 
-def test_aggregate_tags(fixture_points):
+# four series of one metric: ``rack`` is missing on one of them, ``host``
+# conflicts within every dc group, and the host values mix case and a
+# non-ASCII letter so driver-side ordering is checked against Spark's
+MIXED_TAGS = (
+    {"host": "a", "dc": "lga", "rack": "r1"},
+    {"host": "b", "dc": "lga"},
+    {"host": "\u00e9", "dc": "phx", "rack": "r1"},
+    {"host": "Z", "dc": "phx", "rack": "r1"},
+)
+
+
+@pytest.fixture(scope="module")
+def mixed_points(spark):
+    rows = [("m.mixed", (EPOCH + 60 * i + 7 * n) * 1000, float(10 * n + i), tags)
+            for n, tags in enumerate(MIXED_TAGS) for i in range(5)]
+    return spark.createDataFrame(
+        rows, "metric string, ts_ms long, value double, tags map<string,string>"
+    ).select("metric", F.timestamp_millis("ts_ms").alias("ts"), "value",
+             F.lit(None).cast("long").alias("value_long"), "tags")
+
+
+def test_aggregate_tags(fixture_points, mixed_points):
     out = api.handle_query(
         fixture_points,
         {"start": EPOCH, "end": EPOCH + 100_000,
@@ -324,6 +399,52 @@ def test_aggregate_tags(fixture_points):
         {"start": EPOCH, "end": EPOCH + 100_000, "m": "sum:10m-avg:sys.cpu.user"},
     )
     assert both[0]["aggregateTags"] == ["dc", "host"] and both[0]["tags"] == {}
+    # a key only some series carry stays in tags when every series that
+    # has it agrees; a conflicting key moves to aggregateTags
+    by_dc = api.handle_query(
+        mixed_points,
+        {"start": EPOCH, "end": EPOCH + 1_000, "m": "sum:1m-sum:m.mixed{dc=*}"},
+    )
+    assert [(s["tags"], s["aggregateTags"]) for s in by_dc] == [
+        ({"dc": "lga", "rack": "r1"}, ["host"]),
+        ({"dc": "phx", "rack": "r1"}, ["host"]),
+    ]
+    flat = api.handle_query(
+        mixed_points,
+        {"start": EPOCH, "end": EPOCH + 1_000, "m": "sum:1m-sum:m.mixed"},
+    )
+    assert flat[0]["tags"] == {"rack": "r1"}
+    assert flat[0]["aggregateTags"] == ["dc", "host"]
+
+
+def test_resolved_series_parity(spark, mixed_points):
+    """tags/aggregateTags, TSUID lists, annotation routing and series/dps
+    order all come from the one series resolution and the one collect, and
+    match what per-fact Spark aggregates and ``orderBy`` give."""
+    from opentsdb_spark.sources.points import series_id_col
+
+    sids = {r["host"]: r["sid"] for r in mixed_points.select(
+        F.col("tags")["host"].alias("host"), series_id_col().alias("sid")
+    ).distinct().collect()}
+    anns = _notes(spark, [(sids["a"], 60, "on a"), (None, 61, "all")])
+    for m, key in (("sum:1m-sum:m.mixed{dc=*}", "dc"), ("sum:m.mixed{host=*}", "host")):
+        req = {"start": EPOCH, "end": EPOCH + 1_000, "m": m,
+               "show_tsuids": "1", "global_annotations": "1"}
+        out = api.handle_query(mixed_points, req, annotations=anns)
+        for s in out:
+            members = sorted(sids[t["host"]] for t in MIXED_TAGS
+                             if t[key] == s["tags"][key])
+            assert s["tsuids"] == members
+            assert [a["description"] for a in s["annotations"]] == (
+                ["on a"] if sids["a"] in members else [])
+            assert [g["description"] for g in s["globalAnnotations"]] == ["all"]
+        # series and dps order: Spark's ascending orderBy on key then time
+        compiled = api.compile_query(mixed_points, parse_query(req))
+        want = [(r[key], r["t"] // 1000) for r in compiled[0].df.select(
+            key, F.unix_millis("ts").alias("t")).orderBy(key, "t").collect()]
+        got = [(s["tags"][key], int(t)) for s in out for t in s["dps"]]
+        assert got == want
+    assert [s["tags"]["host"] for s in out] == ["Z", "a", "b", "\u00e9"]
 
 
 def test_tree(fixture_points):
@@ -657,12 +778,11 @@ def test_query_annotations_merged(spark, fixture_points):
 
 
 def test_annotation_tsuid_filter_in_plan(spark, fixture_points):
-    """Plan evidence for the pushed annotation identity filter: passing the
-    matched-series frame turns the fetch into a broadcast LEFT SEMI join,
-    so annotation scan cost follows the matched series, not the global
-    annotation table."""
+    """Plan evidence for the annotation identity filter: the resolved series
+    ids arrive as an IN list of literals, so the lookup reads only the
+    annotation frame — no join against the points."""
     from opentsdb_spark.operators.annotations import annotations_in_range
-    from opentsdb_spark.sources.points import series_id_col
+    from opentsdb_spark.serializer import resolve_series
 
     anns = spark.createDataFrame(
         [("sys.cpu.user{dc=lga,host=web01}", (EPOCH + 60) * 1000, None, "d"),
@@ -671,13 +791,27 @@ def test_annotation_tsuid_filter_in_plan(spark, fixture_points):
         "tsuid string, s long, e long, description string",
     ).select("tsuid", F.timestamp_millis("s").alias("start_time"),
              F.timestamp_millis("e").alias("end_time"), "description")
-    ids = fixture_points.select(series_id_col().alias("tsuid"))
+    ids = tuple(s.tsuid for s in resolve_series(fixture_points))
     out = annotations_in_range(anns, EPOCH * 1000, (EPOCH + 300) * 1000,
-                               tsuid_df=ids, include_global=True)
+                               tsuids=ids, include_global=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan and "Broadcast" in plan
+    assert (" IN (" in plan or " INSET " in plan) and "Join" not in plan
     got = sorted(r["description"] for r in out.collect())
     assert got == ["d", "g"]  # matched + global; unmatched series dropped
+
+
+def test_annotation_tsuid_filter_exact(spark):
+    """Series ids reach the IN list verbatim, whatever characters they hold."""
+    from opentsdb_spark.operators.annotations import annotations_in_range
+
+    odd = ["m{k=a'b}", "m{k=c\\d}", "m{k=${env:HOME}}", "m{k=x\ny}", "m{k=\U0001f600}"]
+    anns = spark.createDataFrame(
+        [(t, (EPOCH + 60) * 1000) for t in [*odd, "m{k=other}"]], "tsuid string, s long",
+    ).select("tsuid", F.timestamp_millis("s").alias("start_time"),
+             F.lit(None).cast("timestamp").alias("end_time"))
+    out = annotations_in_range(anns, EPOCH * 1000, (EPOCH + 300) * 1000,
+                               tsuids=tuple(odd), include_global=False)
+    assert sorted(r["tsuid"] for r in out.collect()) == sorted(odd)
 
 
 def test_graph_ascii_format():
