@@ -28,9 +28,10 @@ from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from opentsdb_spark.session import tiny_df
+from opentsdb_spark.session import arrow_df
 from pyspark.sql import functions as F
 
 import opentsdb_spark
@@ -631,7 +632,9 @@ def _json_lines_frame(spark, body) -> tuple[DataFrame, int]:
     import json as _json
 
     dps = body if isinstance(body, list) else [body]
-    lines = tiny_df(spark, [(_json.dumps(dp),) for dp in dps], "value string")
+    # a LocalRelation: the parse job then needs no Python worker
+    lines = arrow_df(spark, pa.table(
+        {"value": pa.array([_json.dumps(dp) for dp in dps], pa.string())}))
     return lines, len(dps)
 
 
@@ -640,25 +643,29 @@ def handle_put(
 ) -> tuple[dict[str, Any], DataFrame]:
     """POST /api/put (reference src/tsd/PutDataPointRpc.java:300-540): body
     is one IncomingDataPoint object or an array. Returns (response, valid
-    points frame) — the caller writes/streams the frame. Response carries
-    success/failed counts (?summary) and per-point errors (?details),
-    mirroring the reference's shapes."""
+    points frame). The batch is parsed, validated and materialized in one
+    Spark job (``toArrow``); the frame is a ``session.arrow_df`` over that
+    table, so the caller stores the points without re-parsing them.
+    Response carries success/failed counts (?summary) and per-point errors
+    (?details), mirroring the reference's shapes."""
     from opentsdb_spark.auth import check_permission
     from opentsdb_spark.streaming.ingest import apply_ingest_filters, parse_put_json
 
     request = request or {}
     check_permission(request, "HTTP_PUT")  # no-op unless auth is enabled
     lines, n_total = _json_lines_frame(spark, body)
-    points = apply_ingest_filters(parse_put_json(lines))
-    n_ok = points.count()
+    table = apply_ingest_filters(parse_put_json(lines)).toArrow()
+    n_ok = table.num_rows
     resp: dict[str, Any] = {"success": n_ok, "failed": n_total - n_ok}
     if request.get("details"):
-        import json as _json
-
-        ok_keys = {
-            (r["metric"], r["ts"], round(r["value"], 9) if r["value"] is not None else None)
-            for r in points.select("metric", F.unix_millis("ts").alias("ts"), "value").collect()
-        }
+        ok_keys = set(zip(
+            table.column("metric").to_pylist(),
+            # timestamps arrive as UTC microseconds; keys compare in ms
+            [None if t is None else t // 1000
+             for t in table.column("ts").cast(pa.int64()).to_pylist()],
+            [None if v is None else round(v, 9)
+             for v in table.column("value").to_pylist()],
+        ))
         errors = []
         for dp in body if isinstance(body, list) else [body]:
             try:
@@ -672,7 +679,7 @@ def handle_put(
                 errors.append({"error": "Illegal argument: invalid metric, tags or filter reject",
                                "datapoint": dp})
         resp["errors"] = errors
-    return resp, points
+    return resp, arrow_df(spark, table)
 
 
 def handle_rollup_put(spark, body, request: dict | None = None) -> tuple[dict[str, Any], DataFrame]:

@@ -17,11 +17,16 @@ for startup). This module mirrors that with stdlib servers:
     telnet command map, src/tsd/PutDataPointRpc.java:120-180,
     src/tsd/HistogramDataPointRpc.java:92-158).
 
-Writes mutate the in-memory frames under a lock (union + periodic
-localCheckpoint so lineage stays bounded); durable ingest at scale is the
-Structured Streaming path (streaming/ingest.py) — this server is the
-interactive/operational surface, exactly the role the reference TSD plays
-in front of HBase.
+Writes mutate the in-memory frames under a lock. A put is parsed,
+validated and materialized once, in its one Spark job, as an Arrow batch
+appended to a memtable; the served point frame is a plan of fixed depth,
+base ∪ delta ∪ memtable, where the memtable is ONE LocalRelation over the
+concatenated batches and every ``_CHECKPOINT_EVERY`` writes folds it into
+the delta, a localCheckpoint of the written points only (the Structured
+Streaming shape: incremental state with bounded lineage). Durable ingest
+at scale is the Structured Streaming path (streaming/ingest.py) — this
+server is the interactive/operational surface, exactly the role the
+reference TSD plays in front of HBase.
 
 Start one with::
 
@@ -37,14 +42,18 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from opentsdb_spark.session import empty_df, tiny_df
+from opentsdb_spark.session import arrow_df, empty_df, tiny_df
 
 from opentsdb_spark import api
 from opentsdb_spark.plans.limits import QueryLimitExceeded
 
-_CHECKPOINT_EVERY = 32  # union depth before compacting lineage
+# writes per fold: every _CHECKPOINT_EVERY puts the memtable's batches fold
+# into the checkpointed delta frame, so the memtable that each put re-sends
+# to the JVM stays small while the served plan keeps at most three leaves
+_CHECKPOINT_EVERY = 32
 
 # Explicit "respond 204" sentinel. Handlers that legitimately produce an
 # empty string WITH a content type (e.g. GET /logs on an empty ring buffer)
@@ -111,6 +120,11 @@ class TSD:
             "If-Modified-Since"
         )
         self.spark = spark
+        # served point frame = base ∪ delta ∪ memtable (see _absorb); reads
+        # snapshot self.points, writes rebuild it under the lock
+        self._base = points
+        self._delta: DataFrame | None = None
+        self._memtable: list[pa.Table] = []
         self.points = points
         # /s/* static root (reference tsd.http.staticroot); None = 404
         self.static_dir = static_dir
@@ -213,29 +227,71 @@ class TSD:
 
     # ------------------------------------------------------------ writes
     def _absorb(self, frame: DataFrame) -> None:
-        """Union new points into the served frame (caller holds the lock)."""
-        self.points = self.points.unionByName(frame, allowMissingColumns=True)
+        """Append one materialized put batch (a ``session.arrow_df`` frame)
+        to the memtable; every ``_CHECKPOINT_EVERY`` writes fold it into the
+        delta (caller holds the lock)."""
+        self._memtable.append(frame.arrow)
         self._writes += 1
         if self._writes % _CHECKPOINT_EVERY == 0:
-            # bound the union-lineage depth under sustained ingest
-            self.points = self.points.localCheckpoint()
+            self._fold()
+        self._serve()
+
+    def _fold(self, rewrite=None) -> None:
+        """delta = rewrite(delta ∪ memtable).localCheckpoint(), emptying
+        the memtable: one job over written points only, never the base
+        (caller holds the lock)."""
+        written = self._delta
+        mem = self._memtable_df()
+        if mem is not None:
+            written = mem if written is None else written.unionByName(
+                mem, allowMissingColumns=True)
+        if written is not None:
+            if rewrite is not None:
+                written = rewrite(written)
+            # a union's partitions add up; one partition keeps the delta's
+            # scan at one task however many folds have run
+            self._delta = written.coalesce(1).localCheckpoint()
+        self._memtable = []
+
+    def _memtable_df(self) -> DataFrame | None:
+        if not self._memtable:
+            return None
+        # telnet batches lack value_long: promotion null-fills it
+        return arrow_df(self.spark, pa.concat_tables(
+            self._memtable, promote_options="default"))
+
+    def _serve(self) -> None:
+        """Rebuild the served frame base ∪ delta ∪ memtable (caller holds
+        the lock)."""
+        points = self._base
+        for part in (self._delta, self._memtable_df()):
+            if part is not None:
+                points = points.unionByName(part, allowMissingColumns=True)
+        self.points = points
+
+    def _rewrite(self, fn) -> None:
+        """Apply a frame rewrite (DELETE /api/query, uid rename) to every
+        stored point: lazily to the base, and to the written points by
+        folding the memtable into the delta through it (caller holds the
+        lock)."""
+        self._base = fn(self._base)
+        self._fold(rewrite=fn)
+        self._serve()
 
     def put_lines(self, lines: list[str]) -> dict[str, int]:
         """Telnet ``put`` batch via the line parser
         (sources/points.py:154-203, reference PutDataPointRpc.execute)."""
-        from pyspark.sql import functions as F
-
         from opentsdb_spark.sources.points import parse_put_lines
         from opentsdb_spark.streaming.ingest import apply_ingest_filters
 
-        ldf = tiny_df(self.spark, [(x,) for x in lines], "value string")
+        ldf = arrow_df(self.spark, pa.table({"value": pa.array(lines, pa.string())}))
         pts = apply_ingest_filters(parse_put_lines(ldf))
-        # the count depends only on this batch — run the Spark job OUTSIDE
+        # the batch depends only on these lines — materialize it OUTSIDE
         # the lock so a big telnet flush doesn't stall every other request
-        n = pts.count()
+        table = pts.select("metric", "ts", "value", "tags").toArrow()
         with self.lock:
-            self._absorb(pts.select("metric", "ts", "value", "tags"))
-        return {"success": n, "failed": len(lines) - n}
+            self._absorb(arrow_df(self.spark, table))
+        return {"success": table.num_rows, "failed": len(lines) - table.num_rows}
 
     def rollup_lines(self, lines: list[str]) -> dict[str, int]:
         """Telnet ``rollup interval:[aggregator] metric ts value tag=v...``
@@ -690,8 +746,8 @@ class TSD:
                 from opentsdb_spark.plans.planner import delete_matching_points
 
                 with self.lock:
-                    self.points = delete_matching_points(
-                        self.points, tsq, now_ms=request.get("_now_ms"))
+                    self._rewrite(lambda df: delete_matching_points(
+                        df, tsq, now_ms=request.get("_now_ms")))
                 return out, None
             if sub == "last":
                 return api.handle_last(points, request), None
@@ -795,8 +851,9 @@ class TSD:
                     self.uid_registry = reg
                 return resp, None
             if sub == "rename":
+                rename = body or request
                 with self.lock:
-                    self.points = api.handle_uid_rename(self.points, body or request)
+                    self._rewrite(lambda df: api.handle_uid_rename(df, rename))
                 return {"result": "renamed"}, None
             if sub == "uidmeta":
                 with self.lock:

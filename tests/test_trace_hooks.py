@@ -2,7 +2,9 @@
 layer's entry point by name. A refactor that renames or stops calling one of
 them would make a traced run silently lose that layer, so this guard runs
 ``install()`` in a fresh interpreter (no Spark session needed) and checks
-that ``handle_query`` still calls the names it wraps."""
+that ``handle_query`` still calls the names it wraps and that both put
+paths (``TSD._route`` for HTTP, ``TSD.put_lines`` for telnet) still go
+through ``_absorb``."""
 
 import os
 import subprocess
@@ -27,6 +29,10 @@ assert not missing, f"handle_query no longer calls {{sorted(missing)}}"
 assert "enforce_data_point_limit" in serializer.serialize_subquery.__code__.co_names
 assert wrapped(serializer.enforce_data_point_limit)
 assert isinstance(tsd._CHECKPOINT_EVERY, int) and callable(tsd.TSD._absorb)
+# put figures (tsd.absorb, tsd.checkpoints) come from the rebound _absorb
+for writer in (tsd.TSD._route, tsd.TSD.put_lines):
+    assert "_absorb" in writer.__code__.co_names, f"{{writer.__name__}} no longer calls _absorb"
+assert "handle_put" in tsd.TSD._route.__code__.co_names
 print("ok")
 """
 
