@@ -33,7 +33,6 @@ to a single groupBy.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -164,13 +163,18 @@ def _pack_per_series(df: DataFrame, gnames: list[str]) -> DataFrame:
 def _interpolate_to_union_grid(df: DataFrame, gnames: list[str], interp: str) -> DataFrame:
     """Vectorized pack strategy: same packing head as the expression form
     (see _interpolate_to_union_grid_expr for the semantics contract), but
-    the per-slot lookup/interpolation runs in one Arrow-batched pandas UDF
+    the per-slot lookup/interpolation runs in one Arrow-batched Python map
     using numpy searchsorted — O((|grid|+|points|) log |points|) per series
     instead of the O(|grid| x |points|) interpreted higher-order-function
     scans of the expression form (Spark evaluates transform/filter lambdas
     via CodegenFallback, so each slot's filter() was a full interpreted
     array walk; measured 2.5x of the whole aligned-aggregate query at
     sf0.1).
+
+    ``mapInArrow``, not a pandas UDF column: a UDF column plans as
+    ArrowEvalPython, which reports no output partitioning, so the final
+    groupBy re-shuffles even an input already clustered by group (or held
+    in one partition); a map over batches keeps its child's partitioning.
 
     Bit-compatibility with the expression form: millisecond timestamps are
     widened to float64 exactly (|ms| < 2^52), and the LERP arithmetic
@@ -180,52 +184,72 @@ def _interpolate_to_union_grid(df: DataFrame, gnames: list[str], interp: str) ->
     span return NULL (never NaN) so downstream aggregates skip them —
     asserted equal to the expression form in
     tests/test_groupby_strategies.py."""
-    @F.pandas_udf("array<double>")
-    def interp_slots(all_ms: pd.Series, pt_ms: pd.Series, pt_v: pd.Series) -> pd.Series:
+    def interp_slots(a, t, v):
         import numpy as np
 
-        out = []
-        for am, tm, vv in zip(all_ms, pt_ms, pt_v):
-            a = np.asarray(am, dtype=np.int64)
-            t = np.asarray(tm, dtype=np.int64)
-            v = np.asarray(vv, dtype=np.float64)
-            li = np.searchsorted(t, a, side="left")
-            ri = np.searchsorted(t, a, side="right")
-            exact = ri > li  # slot timestamp present in this series
-            prev_i = li - 1  # last point strictly before the slot
-            next_i = ri  # first point strictly after the slot
-            interior = (prev_i >= 0) & (next_i < len(t)) & ~exact
-            vals = np.zeros(len(a), dtype=np.float64)
-            vals[exact] = v[li[exact]]
-            if interp == "lerp":
-                af = a.astype(np.float64)
-                tf = t.astype(np.float64)
-                p, n = prev_i[interior], next_i[interior]
-                vals[interior] = v[p] + (af[interior] - tf[p]) * (v[n] - v[p]) / (
-                    tf[n] - tf[p]
-                )
-            elif interp == "zim":
-                vals[interior] = 0.0
-            elif interp == "max":
-                vals[interior] = _DBL_MAX
-            elif interp == "min":
-                vals[interior] = -_DBL_MAX
-            elif interp == "prev":
-                vals[interior] = v[prev_i[interior]]
-            else:  # pragma: no cover
-                raise ValueError(f"unknown interpolation: {interp}")
-            valid = exact | interior
-            out.append([float(x) if ok else None for x, ok in zip(vals, valid)])
-        return pd.Series(out)
+        li = np.searchsorted(t, a, side="left")
+        ri = np.searchsorted(t, a, side="right")
+        exact = ri > li  # slot timestamp present in this series
+        prev_i = li - 1  # last point strictly before the slot
+        next_i = ri  # first point strictly after the slot
+        interior = (prev_i >= 0) & (next_i < len(t)) & ~exact
+        vals = np.zeros(len(a), dtype=np.float64)
+        vals[exact] = v[li[exact]]
+        if interp == "lerp":
+            af = a.astype(np.float64)
+            tf = t.astype(np.float64)
+            p, n = prev_i[interior], next_i[interior]
+            vals[interior] = v[p] + (af[interior] - tf[p]) * (v[n] - v[p]) / (
+                tf[n] - tf[p]
+            )
+        elif interp == "zim":
+            vals[interior] = 0.0
+        elif interp == "max":
+            vals[interior] = _DBL_MAX
+        elif interp == "min":
+            vals[interior] = -_DBL_MAX
+        elif interp == "prev":
+            vals[interior] = v[prev_i[interior]]
+        else:  # pragma: no cover
+            raise ValueError(f"unknown interpolation: {interp}")
+        return vals, exact | interior
 
-    g = _pack_per_series(df, gnames).withColumn(
-        "vals",
-        interp_slots(
-            F.transform("all_ts", F.unix_millis),
-            F.transform("pts", lambda p: F.unix_millis(p["t"])),
-            F.transform("pts", lambda p: p["v"]),
-        ),
+    keep = [*gnames, "__sid", "all_ts"]
+
+    def with_vals(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def rows(col, dtype):
+            # per-row offsets from 0 and the flat values they index
+            off = col.offsets.to_numpy()
+            flat = col.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
+            return off - off[0], np.asarray(flat, dtype=dtype)
+
+        for b in batches:
+            if not b.num_rows:
+                continue
+            a_off, a_flat = rows(b.column("__all_ms"), np.int64)
+            t_off, t_flat = rows(b.column("__pt_ms"), np.int64)
+            _, v_flat = rows(b.column("__pt_v"), np.float64)
+            vals = np.zeros(len(a_flat), dtype=np.float64)
+            valid = np.zeros(len(a_flat), dtype=bool)
+            for i in range(b.num_rows):
+                a, ts = slice(a_off[i], a_off[i + 1]), slice(t_off[i], t_off[i + 1])
+                vals[a], valid[a] = interp_slots(a_flat[a], t_flat[ts], v_flat[ts])
+            out = pa.ListArray.from_arrays(
+                pa.array(a_off, pa.int32()), pa.array(vals, mask=~valid))
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in keep] + [out], names=[*keep, "vals"])
+
+    g = _pack_per_series(df, gnames).select(
+        *gnames, "__sid", "all_ts",
+        F.transform("all_ts", F.unix_millis).alias("__all_ms"),
+        F.transform("pts", lambda p: F.unix_millis(p["t"])).alias("__pt_ms"),
+        F.transform("pts", lambda p: p["v"]).alias("__pt_v"),
     )
+    out_schema = g.select(*keep, F.col("__pt_v").cast("array<double>").alias("vals")).schema
+    g = g.mapInArrow(with_vals, out_schema)
     zipped = F.arrays_zip(F.col("all_ts").alias("ts"), F.col("vals").alias("value"))
     return g.select(*gnames, "__sid", F.explode(zipped).alias("z")).select(
         *gnames, "__sid", F.col("z.ts").alias("ts"), F.col("z.value").alias("value")

@@ -9,10 +9,13 @@ src/tsd/HttpJsonSerializer.java:743-866): one object per result series:
 
 This is the API boundary — the one place results are collected to the
 driver (post-aggregation output is small by construction). A sub-query
-costs two jobs here: ``resolve_series`` (one row per matched series, from
+runs two actions here: ``resolve_series`` (one row per matched series, from
 which the caller prices the budget and looks up annotations, and from which
 ``tags``/``aggregateTags``/TSUIDs are derived) and the one collect of the
-data plan.
+data plan. Over the TSD's served frame, which holds one partition for a
+base of one file split, each action is one Spark job with no shuffle; a
+zero-filled downsample adds one broadcast job for its fill join. Over a
+frame of several partitions, AQE adds a job per shuffle stage.
 """
 
 from __future__ import annotations

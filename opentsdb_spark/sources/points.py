@@ -181,9 +181,11 @@ def load_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, path, mtime) exactly like ``load_table``: the
     ``events_to_points`` column chain (map build + lambda conversion) costs
     a fixed ~0.1-0.3 s of Py4J round trips per construction, paid by every
-    tsdb query. The cached object is a logical PLAN — executions still
-    scan parquet, results are never cached, and a rewritten events table
-    drops the entry via the mtime key. ``load_table`` runs on every MISS,
+    tsdb query. The cached object is a logical PLAN — executions of it
+    scan parquet, results are never cached here, and a rewritten events
+    table drops the entry via the mtime key. The TSD daemon materializes
+    this plan once, at construction (``TSD._materialize``), so its reads
+    scan memory instead. ``load_table`` runs on every MISS,
     so its session-conf (re)setting contract is preserved by re-setting
     the same confs on a hit."""
     path = f"{sf_dir}/events.parquet"

@@ -17,13 +17,24 @@ for startup). This module mirrors that with stdlib servers:
     telnet command map, src/tsd/PutDataPointRpc.java:120-180,
     src/tsd/HistogramDataPointRpc.java:92-158).
 
+The point frame the daemon is given is materialized once, at
+construction: ``coalesce(n).localCheckpoint()``, where ``n`` is that
+frame's own partition count (Spark's file-split rule; one for a base of a
+few MB). Reads then scan memory, never the source files, and the served
+frame keeps ``n`` partitions however many puts arrive, so with ``n == 1``
+it reports a single partition and Catalyst plans every read's group-bys,
+joins and windows with no shuffle (the reference likewise keeps each
+series' cells contiguous, src/core/RowKey.java:83-105).
+
 Writes mutate the in-memory frames under a lock. A put is parsed,
 validated and materialized once, in its one Spark job, as an Arrow batch
 appended to a memtable; the served point frame is a plan of fixed depth,
-base ∪ delta ∪ memtable, where the memtable is ONE LocalRelation over the
-concatenated batches and every ``_CHECKPOINT_EVERY`` writes folds it into
-the delta, a localCheckpoint of the written points only (the Structured
-Streaming shape: incremental state with bounded lineage). Durable ingest
+(base ∪ delta ∪ memtable).coalesce(n), where the memtable is ONE
+LocalRelation over the concatenated batches and every
+``_CHECKPOINT_EVERY`` writes folds it into the delta, a materialized frame
+of the written points only (the Structured Streaming shape: incremental
+state with bounded lineage). DELETE /api/query and uid renames
+re-materialize the base the same way. Durable ingest
 at scale is the Structured Streaming path (streaming/ingest.py) — this
 server is the interactive/operational surface, exactly the role the
 reference TSD plays in front of HBase.
@@ -120,12 +131,14 @@ class TSD:
             "If-Modified-Since"
         )
         self.spark = spark
-        # served point frame = base ∪ delta ∪ memtable (see _absorb); reads
-        # snapshot self.points, writes rebuild it under the lock
-        self._base = points
+        # served point frame = (base ∪ delta ∪ memtable).coalesce(n) (see
+        # _absorb); reads snapshot self.points, writes rebuild it under the
+        # lock. n is the given frame's partition count, no job
+        self._partitions = max(1, points.rdd.getNumPartitions())
+        self._base = self._materialize(points)
         self._delta: DataFrame | None = None
         self._memtable: list[pa.Table] = []
-        self.points = points
+        self._serve()
         # /s/* static root (reference tsd.http.staticroot); None = 404
         self.static_dir = static_dir
         # /q graph disk cache root (reference tsd.http.cachedir,
@@ -158,7 +171,8 @@ class TSD:
             self.tree_store = None
         self.lock = threading.Lock()
         # counters get their own lock: increments must not queue behind the
-        # frame lock, which is held across Spark unions during ingest, and
+        # frame lock, which is held across the memtable's re-send to the JVM
+        # on every put and across a fold's or rewrite's Spark job, and
         # unsynchronized += from ThreadingHTTPServer/telnet threads loses
         # counts (read-modify-write race) so the stats drift low
         self._counter_lock = threading.Lock()
@@ -236,9 +250,16 @@ class TSD:
             self._fold()
         self._serve()
 
+    def _materialize(self, frame: DataFrame) -> DataFrame:
+        """Run ``frame`` once into the block manager as ``n`` partitions; the
+        result is an in-memory scan whose plan reports that partitioning
+        (one job). A localCheckpoint, not cache(): /api/dropcaches clears
+        the SQL cache, which would silently drop a cached frame."""
+        return frame.coalesce(self._partitions).localCheckpoint()
+
     def _fold(self, rewrite=None) -> None:
-        """delta = rewrite(delta ∪ memtable).localCheckpoint(), emptying
-        the memtable: one job over written points only, never the base
+        """delta = materialized rewrite(delta ∪ memtable), emptying the
+        memtable: one job over written points only, never the base
         (caller holds the lock)."""
         written = self._delta
         mem = self._memtable_df()
@@ -248,9 +269,7 @@ class TSD:
         if written is not None:
             if rewrite is not None:
                 written = rewrite(written)
-            # a union's partitions add up; one partition keeps the delta's
-            # scan at one task however many folds have run
-            self._delta = written.coalesce(1).localCheckpoint()
+            self._delta = self._materialize(written)
         self._memtable = []
 
     def _memtable_df(self) -> DataFrame | None:
@@ -261,20 +280,22 @@ class TSD:
             self._memtable, promote_options="default"))
 
     def _serve(self) -> None:
-        """Rebuild the served frame base ∪ delta ∪ memtable (caller holds
-        the lock)."""
+        """Rebuild the served frame (base ∪ delta ∪ memtable).coalesce(n):
+        a union's partitions add up, so without the coalesce every put
+        would add partitions and the planner would lose the base's known
+        partitioning (caller holds the lock)."""
         points = self._base
         for part in (self._delta, self._memtable_df()):
             if part is not None:
                 points = points.unionByName(part, allowMissingColumns=True)
-        self.points = points
+        self.points = points.coalesce(self._partitions)
 
     def _rewrite(self, fn) -> None:
         """Apply a frame rewrite (DELETE /api/query, uid rename) to every
-        stored point: lazily to the base, and to the written points by
-        folding the memtable into the delta through it (caller holds the
+        stored point: the base is re-materialized through it, and the
+        written points fold into the delta through it (caller holds the
         lock)."""
-        self._base = fn(self._base)
+        self._base = self._materialize(fn(self._base))
         self._fold(rewrite=fn)
         self._serve()
 

@@ -1,5 +1,5 @@
 """The three cross-series alignment strategies must be value-identical:
-'pack' (vectorized searchsorted pandas UDF) is the production default,
+'pack' (vectorized searchsorted Arrow map) is the production default,
 'pack_expr' (pure Column expressions) is its semantics oracle, and 'join'
 is the unbounded-grid fallback for raw-resolution groups
 (reference semantics: src/core/AggregationIterator.java:690-800)."""

@@ -111,7 +111,7 @@ def _eval_java(n, env):
                     return math.nan
                 return math.inf if a > 0 else -math.inf
             return a / b
-        if b == 0.0:  # %
+        if b == 0.0 or math.isinf(a):  # % (JLS 15.17.3: NaN; fmod raises)
             return math.nan
         return math.fmod(a, b)  # Java % truncates like Spark's Remainder
     _, cop, c1, c2, t, f = n
