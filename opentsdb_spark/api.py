@@ -105,6 +105,15 @@ def _tsquery_from_body(body: dict) -> TSQuery:
     )
 
 
+def _collect_limited(df: DataFrame, max_data_points: int) -> list:
+    """df's rows from one execution: ``limit(n+1).collect()`` under a
+    data-point ceiling n (a plain collect when n = 0, unlimited), then the
+    ceiling check on the rows — the shape serialize_subquery uses."""
+    rows = (df.limit(max_data_points + 1) if max_data_points > 0 else df).collect()
+    enforce_data_point_limit(rows, max_data_points)
+    return rows
+
+
 def handle_query(
     points: DataFrame,
     request: dict,
@@ -482,9 +491,8 @@ def handle_gexp(points: DataFrame, request: dict) -> list[dict[str, Any]]:
     from opentsdb_spark.parse import gexp_metrics
     from opentsdb_spark.plans.limits import strictest_limit
 
-    enforce_data_point_limit(df, strictest_limit(
+    rows = _collect_limited(df.orderBy(*gcols, "ts"), strictest_limit(
         request, gexp_metrics(request["exp"], request.get("timezone", "UTC"))))
-    rows = df.orderBy(*gcols, "ts").collect()
     out: list[dict[str, Any]] = []
     cur_key, cur = None, None
     for r in rows:
@@ -539,8 +547,7 @@ def handle_exp(points: DataFrame, body: dict) -> dict[str, list[dict]]:
     limit = strictest_limit(body, [m.metric for m in metrics])
     for eid, df in results.items():
         gcols = [c for c in df.columns if c not in ("ts", "value")]
-        enforce_data_point_limit(df, limit)
-        out[eid] = [r.asDict() for r in df.orderBy(*gcols, "ts").collect()]
+        out[eid] = [r.asDict() for r in _collect_limited(df.orderBy(*gcols, "ts"), limit)]
     return out
 
 
@@ -548,8 +555,8 @@ def handle_last(points: DataFrame, request: dict) -> list[dict[str, Any]]:
     back_scan = request.get("back_scan")
     back_ms = parse_duration_ms(f"{back_scan}h") if back_scan else None
     df = last_points(points, request.get("metric"), back_ms, request.get("_now_ms"))
-    enforce_data_point_limit(df, request_limit(request, request.get("metric")))
-    return [r.asDict() for r in df.collect()]
+    return [r.asDict() for r in _collect_limited(
+        df, request_limit(request, request.get("metric")))]
 
 
 def handle_suggest(points: DataFrame, request: dict) -> list[str]:
@@ -561,10 +568,9 @@ def handle_suggest(points: DataFrame, request: dict) -> list[str]:
 def handle_lookup(points: DataFrame, request: dict) -> list[dict[str, Any]]:
     tags = {t["key"]: t.get("value") for t in request.get("tags", [])}
     df = lookup(points, request.get("metric"), tags)
-    enforce_data_point_limit(df, request_limit(request, request.get("metric")))
     return [
         {"series_id": r["series_id"], "metric": r["metric"], "tags": dict(r["tags"])}
-        for r in df.collect()
+        for r in _collect_limited(df, request_limit(request, request.get("metric")))
     ]
 
 
@@ -624,8 +630,7 @@ def handle_annotation_query(annotations: DataFrame, request: dict) -> list[dict[
         tsuids=tuple(request.get("tsuids", ())),
         include_global=bool(request.get("global", True)),
     )
-    enforce_data_point_limit(df, request_limit(request))
-    return [r.asDict() for r in df.collect()]
+    return [r.asDict() for r in _collect_limited(df, request_limit(request))]
 
 
 def _json_lines_frame(spark, body) -> tuple[DataFrame, int]:
@@ -873,9 +878,7 @@ def handle_tree(points: DataFrame, request: dict) -> Any:
                                                                      request.get("strict_match"))))
     if "branch" in request:
         return tree_branch(leaves, tuple(request["branch"]))
-    df = tree_branches(leaves)
-    enforce_data_point_limit(df, request_limit(request))
-    return [r.asDict() for r in df.collect()]
+    return [r.asDict() for r in _collect_limited(tree_branches(leaves), request_limit(request))]
 
 
 # process-wide stored trees (reference: tree rows in the UID table)

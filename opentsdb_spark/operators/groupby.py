@@ -26,9 +26,14 @@ Spark shape (set-based, no k-way merge loop):
      same key as 2 — Catalyst reuses the partitioning]
   4. substitute per interp method, groupBy(group, ts).agg        [1 shuffle]
 
-Fast path: if the caller knows every series already shares the same bucket
-grid (downsample with a fill policy), set aligned=True and this collapses
-to a single groupBy.
+Exact single groupBy: expanding a group onto its union grid cannot change
+the answer when every series already shares the same bucket grid (the
+caller passes aligned=True for a downsample with a fill policy), nor when
+the aggregator's interpolation substitutes its own identity element
+(zimsum adds 0, mimmin takes min with +Double.MAX, mimmax max with
+-Double.MAX; SURVEY §2) — every union timestamp holds at least one real
+point, so the substituted values never win. Both cases collapse to one
+groupBy(group, ts), and no strategy below ever sees those aggregators.
 """
 
 from __future__ import annotations
@@ -92,14 +97,20 @@ def cross_series_aggregate(
     the metric collapse into one group).
     Output: (metric, <tagk cols...>, ts, value).
 
-    strategy (when not aligned):
+    An aligned input or an identity-interpolating aggregator (zimsum,
+    mimmin, mimmax; see the module docstring) is one exact groupBy under
+    every strategy. Otherwise, strategy:
       'pack'  one input scan; packs each series' points into arrays —
               memory O(timestamps per group), the right choice whenever the
               input was downsampled first (the reference's own practice —
               its in-heap SpanGroup equally materializes the group)
+      'pack_expr'  the same packing with pure Column expressions — the
+              semantics oracle 'pack' is tested against
       'join'  unbounded grid join (3 derivations of the input sub-plan, more
               shuffles) — choose for raw-resolution groups whose timestamp
               count exceeds executor memory
+      'sweep' linear-time prefix sums for the sum family; falls back to
+              'join' for the other aggregators
     """
     agg = get_aggregator(aggregator) if isinstance(aggregator, str) else aggregator
     gcols = [F.col("tags").getItem(k).alias(f"tag_{k}") for k in group_tagks]
@@ -109,9 +120,14 @@ def cross_series_aggregate(
         "metric", *gcols, "ts", "value", series_id_col("metric", "tags").alias("__sid")
     )
 
-    interp = "prev" if (rate_mode and agg.interp == "lerp") else agg.interp
-
-    if not aligned:
+    # one exact groupBy for an aligned input or an identity interpolation
+    # (module docstring); the latter keeps the doubles every interpolating
+    # strategy returns (a count downsample feeds longs)
+    value = F.col("value")
+    if not aligned and agg.name in ("zimsum", "mimmin", "mimmax"):
+        value = value.cast("double")
+    elif not aligned:
+        interp = "prev" if (rate_mode and agg.interp == "lerp") else agg.interp
         if strategy == "sweep":
             out = _sweep_cross_series(df, gnames, interp, agg)
             if out is not None:
@@ -128,7 +144,7 @@ def cross_series_aggregate(
 
     out = (
         df.groupBy(*gnames, "ts")
-        .agg(agg.builder(F.col("value"), F.unix_millis("ts")).alias("value"))
+        .agg(agg.builder(value, F.unix_millis("ts")).alias("value"))
         .withColumnsRenamed({f"tag_{k}": k for k in group_tagks})
     )
     return out
@@ -204,10 +220,6 @@ def _interpolate_to_union_grid(df: DataFrame, gnames: list[str], interp: str) ->
             )
         elif interp == "zim":
             vals[interior] = 0.0
-        elif interp == "max":
-            vals[interior] = _DBL_MAX
-        elif interp == "min":
-            vals[interior] = -_DBL_MAX
         elif interp == "prev":
             vals[interior] = v[prev_i[interior]]
         else:  # pragma: no cover
@@ -422,10 +434,6 @@ def _substitute_missing(joined: DataFrame, interp: str) -> DataFrame:
         sub = prev_v + (ts_ms - prev_t) * (next_v - prev_v) / (next_t - prev_t)
     elif interp == "zim":
         sub = F.lit(0.0)
-    elif interp == "max":
-        sub = F.lit(_DBL_MAX)
-    elif interp == "min":
-        sub = F.lit(-_DBL_MAX)
     elif interp == "prev":
         sub = prev_v
     else:  # pragma: no cover
@@ -466,17 +474,13 @@ def _sweep_cross_series(df, gnames: list[str], interp: str, agg) -> DataFrame | 
     running sums stay O(active series x value scale) — no a+m*t intercept
     cancellation against epoch-sized timestamps.
 
-    Returns None when the aggregator isn't sweep-decomposable (min/max with
-    lerp, median, dev, mult, percentiles): caller falls back to the grid
-    join. Output: one row per (group, union ts) like the other strategies.
+    zimsum, mimmin and mimmax never reach the sweep: cross_series_aggregate
+    answers them with one exact groupBy. Returns None when the aggregator
+    isn't sweep-decomposable (min/max with lerp, median, dev, mult,
+    percentiles): caller falls back to the grid join. Output: one row per
+    (group, union ts) like the other strategies.
     """
     name = agg.name
-    # no-interpolation aggregators: missing slots contribute 0 (zimsum) or
-    # an ignored sentinel (mimmin/mimmax) — a plain groupBy is exact because
-    # every union timestamp has at least one real point
-    direct = {"zimsum": F.sum, "mimmin": F.min, "mimmax": F.max}
-    if name in direct:
-        return df.groupBy(*gnames, "ts").agg(direct[name](F.col("value")).alias("value"))
     if name not in ("sum", "avg", "count", "pfsum") or interp not in ("lerp", "prev", "zim"):
         return None
 

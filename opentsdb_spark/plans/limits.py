@@ -143,22 +143,15 @@ def request_byte_limit(request: dict, metric: str | None = None) -> int:
     return base
 
 
-def enforce_data_point_limit(result: DataFrame | list, max_data_points: int):
-    """Raise if the result exceeds the ceiling (0 = unlimited, the default,
-    matching tsd.query.limits defaults). ``result`` is either a DataFrame,
-    counted with limit(n+1).count() so the scan short-circuits, or the rows
-    a caller already collected with limit(n+1).collect()."""
-    if max_data_points <= 0:
-        return result
-    if isinstance(result, list):
-        n = len(result)
-    else:
-        n = result.limit(max_data_points + 1).count()
-    if n > max_data_points:
+def enforce_data_point_limit(rows: list, max_data_points: int) -> list:
+    """Raise if the rows a caller collected with limit(n+1).collect()
+    exceed the ceiling n (0 = unlimited, the default, matching
+    tsd.query.limits defaults)."""
+    if 0 < max_data_points < len(rows):
         raise QueryLimitExceeded(
             f"query would return more than {max_data_points} data points"
         )
-    return result
+    return rows
 
 
 def estimate_scan_bytes(df: DataFrame) -> int:

@@ -127,6 +127,29 @@ def _wants_pre_aggregate(q: SubQuery) -> bool:
     )
 
 
+def subquery_predicate(points: DataFrame, q: SubQuery, start_ms: int, end_ms: int) -> Column:
+    """The points one sub-query matches: time range x metric x TSUIDs x tag
+    filters. Reads (compile_subquery, its rollup tables,
+    compile_histogram_subquery) and a raw scan or DELETE (match_predicate)
+    all filter with it, so they cannot match different points."""
+    pred = time_range_predicate(points, start_ms, end_ms)
+    if q.metric:
+        pred = pred & (F.col("metric") == q.metric)
+    elif q.tsuids:
+        # tsuid-only sub-query (GET ?tsuid=agg:ts[,ts] has no metric slot):
+        # series ids embed the metric, so push the derived metric set down
+        # to the scan — the series_id predicate alone can't prune partitions
+        metrics = sorted({t.split("{", 1)[0] for t in q.tsuids})
+        pred = pred & F.col("metric").isin(metrics)
+    else:
+        raise ValueError("sub-query needs a metric or a TSUID list")
+    if q.tsuids:
+        # TSUID-direct query (reference src/core/TsdbQuery.java:552-571)
+        pred = pred & series_id_col("metric", "tags").isin(list(q.tsuids))
+    tags = _tag_predicates(q)
+    return pred if tags is None else pred & tags
+
+
 def compile_subquery(
     points: DataFrame,
     q: SubQuery,
@@ -148,22 +171,8 @@ def compile_subquery(
     stores (the reference's temporal vs groupby tables).
     strict_none: reject agg=none queries whose filters match more than one
     series (see the agg=none branch below for the reference semantics)."""
-    df = points.where(time_range_predicate(points, start_ms, end_ms))
-    if q.metric:
-        df = df.where(F.col("metric") == q.metric)
-    elif q.tsuids:
-        # tsuid-only sub-query (GET ?tsuid=agg:ts[,ts] has no metric slot):
-        # series ids embed the metric, so push the derived metric set down
-        # to the scan — the series_id predicate alone can't prune partitions
-        metrics = sorted({t.split("{", 1)[0] for t in q.tsuids})
-        df = df.where(F.col("metric").isin(metrics))
-    else:
-        raise ValueError("sub-query needs a metric or a TSUID list")
-    df = df.drop("dt", "hr")  # partition-layout columns, consumed by the filter
-
-    if q.tsuids:
-        # TSUID-direct query (reference src/core/TsdbQuery.java:552-571)
-        df = df.where(series_id_col("metric", "tags").isin(list(q.tsuids)))
+    # dt/hr are partition-layout columns, consumed by the filter
+    df = points.where(subquery_predicate(points, q, start_ms, end_ms)).drop("dt", "hr")
 
     if agg_tag:
         tag_v = F.col("tags").getItem(AGG_TAG_KEY)
@@ -175,9 +184,6 @@ def compile_subquery(
             # temporal store: raw rows only — never double-read pre-agg series
             df = df.where(tag_v.isNull() | (tag_v == RAW_AGG_TAG_VALUE))
 
-    pred = _tag_predicates(q)
-    if pred is not None:
-        df = df.where(pred)
     if FIX_DUPLICATES and set(df.columns) <= {"metric", "tags", "ts",
                                               "value", "value_long"}:
         from opentsdb_spark.streaming.ingest import dedup_last_write_wins
@@ -253,9 +259,7 @@ def compile_subquery(
                 RollupTable(
                     t.interval_ms,
                     t.interval_label,
-                    t.df.where(time_range_predicate(t.df, start_ms, end_ms))
-                    .where(F.col("metric") == q.metric)
-                    .where(pred if pred is not None else F.lit(True)),
+                    t.df.where(subquery_predicate(t.df, q, start_ms, end_ms)),
                 )
                 for t in rollup_cfg.tables
             ])
@@ -353,13 +357,7 @@ def compile_histogram_subquery(
 
     if not q.percentiles and not q.show_histogram_buckets:
         raise ValueError("histogram sub-query needs percentiles or show-histogram-buckets")
-    df = hists.where(time_range_predicate(hists, start_ms, end_ms)).where(
-        F.col("metric") == q.metric
-    )
-    df = df.drop("dt", "hr")
-    pred = _tag_predicates(q)
-    if pred is not None:
-        df = df.where(pred)
+    df = hists.where(subquery_predicate(hists, q, start_ms, end_ms)).drop("dt", "hr")
     group_tagks = tuple(f.tagk for f in q.filters if f.group_by)
 
     if q.downsample is not None:
@@ -470,19 +468,7 @@ def match_predicate(points: DataFrame, tsq: TSQuery, now_ms: int | None = None):
     end_ms = parse_datetime_ms(tsq.end, tsq.timezone, now_ms)
     matched = None
     for q in tsq.queries:
-        m = time_range_predicate(points, start_ms, end_ms)
-        if q.metric:
-            m = m & (F.col("metric") == q.metric)
-        elif q.tsuids:
-            # tsuid sub-queries carry metric='' — derive the metric set
-            # from the series ids like compile_subquery's scan pruning
-            metrics = sorted({t.split("{", 1)[0] for t in q.tsuids})
-            m = m & F.col("metric").isin(metrics)
-        if q.tsuids:
-            m = m & series_id_col("metric", "tags").isin(list(q.tsuids))
-        pred = _tag_predicates(q)
-        if pred is not None:
-            m = m & pred
+        m = subquery_predicate(points, q, start_ms, end_ms)
         matched = m if matched is None else (matched | m)
     return matched
 

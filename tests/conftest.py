@@ -53,3 +53,31 @@ def offset_points(spark):
         "metric", F.timestamp_millis("ts_ms").alias("ts"), "value",
         F.lit(None).cast("long").alias("value_long"), "tags",
     ).cache()
+
+
+def substituted(points, aggregator, group_tagks=()):
+    """Cross-series aggregation the long way, for the aggregators whose
+    interpolation substitutes their own identity element (zimsum, mimmin,
+    mimmax): each series is expanded onto its group's union grid by the
+    expression-form interpolation, which substitutes the aggregator's
+    interpolation value (0, +Double.MAX, -Double.MAX), then aggregated by
+    the same groupBy. cross_series_aggregate skips the expansion for these
+    aggregators; this is the oracle that says it may."""
+    from pyspark.sql import functions as F
+
+    from opentsdb_spark.functions.aggregators import get_aggregator
+    from opentsdb_spark.operators.groupby import _interpolate_to_union_grid_expr
+    from opentsdb_spark.sources.points import series_id_col
+
+    agg = get_aggregator(aggregator)
+    gnames = ["metric", *[f"tag_{k}" for k in group_tagks]]
+    df = points.select(
+        "metric", *[F.col("tags")[k].alias(f"tag_{k}") for k in group_tagks],
+        "ts", "value", series_id_col("metric", "tags").alias("__sid"),
+    )
+    return (
+        _interpolate_to_union_grid_expr(df, gnames, agg.interp)
+        .groupBy(*gnames, "ts")
+        .agg(agg.builder(F.col("value"), F.unix_millis("ts")).alias("value"))
+        .withColumnsRenamed({f"tag_{k}": k for k in group_tagks})
+    )

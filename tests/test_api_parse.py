@@ -239,10 +239,12 @@ def test_import_dump_roundtrip(spark, fixture_points):
 
 
 def test_limits(fixture_points):
-    assert enforce_data_point_limit(fixture_points, 0) is fixture_points
-    enforce_data_point_limit(fixture_points, 10_000)
+    rows = fixture_points.collect()
+    assert enforce_data_point_limit(rows, 0) is rows
+    enforce_data_point_limit(rows, 10_000)
+    enforce_data_point_limit(rows[:10], 10)
     with pytest.raises(QueryLimitExceeded):
-        enforce_data_point_limit(fixture_points, 10)
+        enforce_data_point_limit(fixture_points.limit(11).collect(), 10)
 
 
 _JOB_GROUPS = itertools.count()
@@ -325,6 +327,67 @@ def test_query_job_count(spark, fixture_points):
     query_jobs = _jobs(
         spark, lambda: api.handle_query(fixture_points, req, annotations=anns))
     assert query_jobs <= data_jobs + 3
+
+
+# each endpoint called with a data-point ceiling n (0 = unlimited)
+_LIMITED_ENDPOINTS = {
+    "gexp": lambda pts, anns, n: api.handle_gexp(pts, {
+        "exp": "scale(sum:10m-avg:sys.cpu.user{host=*},2)",
+        "start": EPOCH, "end": EPOCH + 100_000, "max_data_points": n}),
+    "exp": lambda pts, anns, n: api.handle_exp(pts, {
+        "time": {"start": EPOCH, "end": EPOCH + 100_000, "aggregator": "sum",
+                 "downsampler": {"interval": "10m", "aggregator": "avg"}},
+        "metrics": [{"id": "a", "metric": "sys.cpu.user"}],
+        "expressions": [{"id": "e", "expr": "a * 2"}],
+        "outputs": [{"id": "e"}], "max_data_points": n}),
+    "last": lambda pts, anns, n: api.handle_last(
+        pts, {"metric": "sys.cpu.user", "max_data_points": n}),
+    "lookup": lambda pts, anns, n: api.handle_lookup(
+        pts, {"metric": "sys.cpu.user", "max_data_points": n}),
+    "annotation": lambda pts, anns, n: api.handle_annotation_query(
+        anns, {"start_time": EPOCH, "end_time": EPOCH + 1_000, "max_data_points": n,
+               "tsuids": ["sys.cpu.user{dc=lga,host=web01}",
+                          "sys.cpu.user{dc=phx,host=web02}"]}),
+    "tree": lambda pts, anns, n: api.handle_tree(pts, {
+        "rules": [{"type": "TAGK", "field": "dc"},
+                  {"type": "METRIC", "separator": "."}],
+        "max_data_points": n}),
+}
+
+
+def _executions(spark, fn) -> int:
+    """SQL executions (one per action: collect, count, ...) ``fn`` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        runs = store.executionsList()
+        return {runs.apply(i).executionId() for i in range(runs.size())}
+
+    before = ids()
+    fn()
+    return len(ids() - before)
+
+
+@pytest.mark.parametrize("endpoint", sorted(_LIMITED_ENDPOINTS))
+def test_limited_endpoint_collects_once(spark, fixture_points, endpoint):
+    """Under a data-point ceiling an endpoint runs its plan once, as
+    limit(n+1).collect(), with no count before it: it runs no more Spark
+    actions than the same request without a ceiling (one plain collect)
+    and returns the same answer. Actions are counted as SQL executions,
+    not jobs: a limited collect may scan the partitions of its one
+    execution in more than one job."""
+    anns = _notes(spark, [("sys.cpu.user{dc=lga,host=web01}", 60, "deploy"),
+                          ("sys.cpu.user{dc=phx,host=web02}", 120, "fix")])
+    call = _LIMITED_ENDPOINTS[endpoint]
+    unlimited = call(fixture_points, anns, 0)  # warm
+    assert unlimited
+    assert call(fixture_points, anns, 10_000) == unlimited
+    limited = _executions(spark, lambda: call(fixture_points, anns, 10_000))
+    assert 0 < limited <= _executions(spark, lambda: call(fixture_points, anns, 0))
+    with pytest.raises(QueryLimitExceeded):
+        call(fixture_points, anns, 1)
 
 
 def test_byte_budget_prices_from_plan_stats(spark, fixture_points, tmp_path):
@@ -618,6 +681,38 @@ def test_handle_query_delete(fixture_points):
         assert still.count() == 0
     finally:
         api.ALLOW_DELETE = False
+
+
+def test_delete_removes_what_the_read_matched(fixture_points):
+    """DELETE /api/query removes exactly the points the same query reads:
+    each sub-query's matched points (the read's source frame) together,
+    and nothing else — for a metric with a tag filter, a regexp filter
+    and a TSUID-only sub-query."""
+    from opentsdb_spark.model import SubQuery, TagFilter, TSQuery
+    from opentsdb_spark.plans.planner import compile_query, delete_matching_points
+
+    def keyed(df):
+        return {(r["metric"], r["ts"], r["value"], tuple(sorted(r["tags"].items())))
+                for r in df.collect()}
+
+    every = keyed(fixture_points)
+    assert len(every) == fixture_points.count()  # no duplicate points
+
+    tsq = TSQuery(start=str(EPOCH + 600), end=str(EPOCH + 1_200), queries=(
+        SubQuery(metric="sys.cpu.user", aggregator="sum",
+                 filters=(TagFilter("literal_or", "host", "web01", False),)),
+        SubQuery(metric="", aggregator="sum",
+                 tsuids=("sys.cpu.user{dc=phx,host=web02}",)),
+    ))
+    wider = TSQuery(start=str(EPOCH), end=str(EPOCH + 9_000), queries=(
+        SubQuery(metric="sys.cpu.user", aggregator="max",
+                 filters=(TagFilter("regexp", "dc", "p.*", True),)),
+    ))
+    for q in (tsq, wider):
+        read = set().union(*(keyed(r.source_df) for r in compile_query(fixture_points, q)))
+        deleted = every - keyed(delete_matching_points(fixture_points, q))
+        assert deleted == read
+        assert 0 < len(deleted) < len(every)
 
 
 def test_fsck(spark, fixture_points):

@@ -11,7 +11,7 @@ from opentsdb_spark.model import DownsampleSpec, RateOptions
 from opentsdb_spark.operators.downsample import downsample
 from opentsdb_spark.operators.groupby import cross_series_aggregate
 from opentsdb_spark.operators.rate import rate
-from tests.conftest import EPOCH
+from tests.conftest import EPOCH, substituted
 
 _slow = settings(max_examples=8, deadline=None,
                  suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -242,11 +242,16 @@ def test_calendar_bucket_laws(spark, offs, unit_n, tz):
 @given(pts=points_strategy)
 def test_interpolation_strategies_agree_property(spark, pts):
     """pack (array-side) and join (grid-join) interpolation must agree on
-    random inputs for every interpolation class."""
+    random inputs for every interpolation class (count carries zim); for
+    the identity interpolations (zimsum, mimmin, mimmax) the one-groupBy
+    answer must agree with substituting the identity on the union grid."""
     df = _df(spark, pts).withColumn("value_long", F.lit(None).cast("long"))
-    for agg in ("sum", "zimsum", "pfsum"):
+    for agg in ("sum", "zimsum", "mimmin", "mimmax", "count", "pfsum"):
         a = cross_series_aggregate(df, agg, (), strategy="pack")
-        b = cross_series_aggregate(df, agg, (), strategy="join")
+        if agg in ("zimsum", "mimmin", "mimmax"):
+            b = substituted(df, agg)
+        else:
+            b = cross_series_aggregate(df, agg, (), strategy="join")
         ra = sorted((r["ts"], r["value"]) for r in a.collect())
         rb = sorted((r["ts"], r["value"]) for r in b.collect())
         assert len(ra) == len(rb)

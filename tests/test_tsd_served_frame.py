@@ -23,9 +23,11 @@ from tests.conftest import SF_DIR
 START = 1704067200  # 2024-01-01T00:00:00Z, the first day of the events table
 END = START + 3 * 86_400
 
-# the three downsample shapes of the dashboard panels
+# the downsample shapes of the dashboard panels, plus the pack strategy's
+# Arrow map, which no panel reaches any more
 PANELS = (
-    "zimsum:10m-sum:purchase{k=*}",  # pack
+    "zimsum:10m-sum:purchase{k=*}",  # identity interpolation: one groupBy
+    "sum:10m-sum:purchase{k=*}",  # lerp without fill: pack (Arrow map)
     "sum:1h-sum-zero:view{big=*}",  # linear-rate rewrite
     "p95:30m-max-zero:signup{k=wildcard(1*)}",  # percentile window
 )
@@ -75,6 +77,9 @@ def _assert_zero_exchange(spark, tsd, when):
             # side may still be a BroadcastExchange (one job, no shuffle)
             assert not re.search(r"\bExchange\b", plan), f"{m} {when}:\n{plan}"
             assert not _file_scans(plan), f"{m} {when}:\n{plan}"
+        # the identity rule starts no Python worker; lerp still packs
+        arrow_map = any("MapInArrow" in plan for plan in plans)
+        assert arrow_map == m.startswith("sum:10m-sum"), f"{m} {when}:\n{plans}"
         assert jobs <= 3, f"{m} {when}: {jobs} jobs"
 
 
