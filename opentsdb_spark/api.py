@@ -645,12 +645,12 @@ def _json_lines_frame(spark, body) -> tuple[DataFrame, int]:
 
 def handle_put(
     spark, body, request: dict | None = None
-) -> tuple[dict[str, Any], DataFrame]:
+) -> tuple[dict[str, Any], pa.Table]:
     """POST /api/put (reference src/tsd/PutDataPointRpc.java:300-540): body
     is one IncomingDataPoint object or an array. Returns (response, valid
-    points frame). The batch is parsed, validated and materialized in one
-    Spark job (``toArrow``); the frame is a ``session.arrow_df`` over that
-    table, so the caller stores the points without re-parsing them.
+    points as an Arrow table). The batch is parsed, validated and
+    materialized in one Spark job (``toArrow``), so the caller stores the
+    points without re-parsing them.
     Response carries success/failed counts (?summary) and per-point errors
     (?details), mirroring the reference's shapes."""
     from opentsdb_spark.auth import check_permission
@@ -684,7 +684,7 @@ def handle_put(
                 errors.append({"error": "Illegal argument: invalid metric, tags or filter reject",
                                "datapoint": dp})
         resp["errors"] = errors
-    return resp, arrow_df(spark, table)
+    return resp, table
 
 
 def handle_rollup_put(spark, body, request: dict | None = None) -> tuple[dict[str, Any], DataFrame]:
@@ -988,30 +988,6 @@ def handle_uid_assign(
     return uid_assign(registry, requests, spark=spark)
 
 
-ENDPOINTS_UID = {
-    "/api/uid/assign": handle_uid_assign,
-    "/api/uid/uidmeta": handle_uidmeta_edit,
-    "/api/uid/tsmeta": handle_tsmeta_edit,
-    "/api/uid/rename": handle_uid_rename,
-}
-
-# write-path endpoints: handlers return (response, frame) — the server loop
-# owns persistence (mirrors the reference where the RPC hands points to
-# TSDB.addPoint and meta to storage)
-ENDPOINTS_WRITE = {
-    "/api/put": handle_put,
-    "/api/rollup": handle_rollup_put,
-    "/api/histogram": handle_histogram_put,
-    "/api/annotation/edit": handle_annotation_edit,
-    "/api/annotation/bulk": handle_annotation_bulk_delete,
-    "/api/tree": handle_tree,
-    "/api/tree/edit": handle_tree_edit,
-    "/api/tree/rebuild": handle_tree_rebuild,
-    "/api/tree/collisions": handle_tree_family,
-    "/api/tree/notmatched": handle_tree_family,
-}
-
-
 def handle_aggregators(*_a) -> list[str]:
     return sorted(AGGREGATORS)
 
@@ -1030,21 +1006,6 @@ def handle_config(spark, *_a) -> dict[str, str]:
     return {k: v for k, v in spark.sparkContext.getConf().getAll()}
 
 
-ENDPOINTS = {
-    "/api/query": handle_query,
-    "/api/query/gexp": handle_gexp,
-    "/api/query/exp": handle_exp,
-    "/api/query/last": handle_last,
-    "/api/suggest": handle_suggest,
-    "/api/search": handle_search,
-    "/api/search/lookup": handle_lookup,
-    "/api/annotation": handle_annotation_query,
-    "/api/aggregators": handle_aggregators,
-    "/api/version": handle_version,
-    "/api/config": handle_config,
-}
-
-
 def handle_stats(spark, *_a) -> dict[str, Any]:
     """/api/stats — engine counters (the reference reports TSD counters;
     here: Spark executor/job metrics relevant to query serving)."""
@@ -1056,9 +1017,6 @@ def handle_stats(spark, *_a) -> dict[str, Any]:
         "executor_count": len([e for e in sc._jsc.sc().statusTracker().getExecutorInfos()]),
         "applicationId": sc.applicationId,
     }
-
-
-ENDPOINTS["/api/stats"] = handle_stats
 
 
 def handle_stats_threads(*_a) -> list[dict[str, Any]]:
@@ -1137,9 +1095,6 @@ def handle_dropcaches(spark, *_a) -> dict[str, str]:
     drops its UID LRU caches; we have no UID caches by design)."""
     spark.catalog.clearCache()
     return {"status": "200", "message": "caches dropped"}
-
-
-ENDPOINTS["/api/dropcaches"] = handle_dropcaches
 
 
 # ------------------------------------------------------------------- /logs --

@@ -10,10 +10,12 @@ src/core/Downsampler.java:28-515):
     (reference src/core/FillPolicy.java:22-28,
     src/core/FillingDownsampler.java:25-120): none|zero|nan|null|scalar.
 
-Spark shape: one shuffle (groupBy series+bucket); the dense-grid fill is a
-`sequence()` explode over the distinct-series frame (no Python loop, no
-UDF). At scale the grid size is bounded by range/interval — downsampling
-always *reduces* cardinality before the cross-series stage.
+Spark shape: one groupBy (series, bucket). A fill explodes a dense
+`sequence()` grid over one row per series and merges it with the buckets
+by union + groupBy on the series' own columns, the tags map included: no
+join, no Python loop, no UDF (over one partition, no shuffle either). At scale the grid size is bounded by
+range/interval — downsampling always *reduces* cardinality before the
+cross-series stage.
 """
 
 from __future__ import annotations
@@ -169,19 +171,10 @@ def _fill_grid(
         "scalar": F.lit(float(spec.fill_scalar)),
     }[spec.fill]
 
-    # tags is a map column: Spark disallows set ops / join equality on maps,
-    # so deduplicate + join on a canonical series-id string instead
-    if "tags" in series_cols:
-        from opentsdb_spark.sources.points import series_id_col
-
-        buckets = buckets.withColumn("__sid", series_id_col("metric", "tags"))
-        series = buckets.groupBy("__sid").agg(
-            *[F.first(c).alias(c) for c in series_cols]
-        )
-        join_keys = ["__sid", "ts"]
-    else:
-        series = buckets.select(*series_cols).distinct()
-        join_keys = [*series_cols, "ts"]
+    # one row per series; grouping (unlike distinct, joins or window
+    # partitions) accepts the tags map and treats maps with the same
+    # entries as one key, whatever their order
+    series = buckets.groupBy(*series_cols).count().drop("count")
 
     if spec.calendar:
         # Calendar grid: dense base-unit boundaries over [start, end) in
@@ -218,25 +211,19 @@ def _fill_grid(
             )
         )
     grid = series.withColumn("ts", ts_source)
-    if "__sid" in join_keys:
-        # canonical series-id string — never null, plain equi-join is safe
-        grid = grid.join(
-            buckets.select(*join_keys, "value"), on=join_keys, how="left"
-        ).drop("__sid")
-    else:
-        # plain series columns can hold NULL (a group-by tag value absent
-        # from a series, e.g. a not_key group under the linear-rate
-        # rewrite) and join equality never matches null keys — the fill
-        # would silently replace REAL sums with the fill value. GROUP BY
-        # treats nulls as equal, so merge grid and data through a
-        # union + max instead of a join: exactly one non-null value
-        # exists per (series, ts), max() ignores the grid row's null.
-        grid = (
-            buckets.select(*join_keys, "value")
-            .unionByName(grid.withColumn("value", F.lit(None).cast("double")))
-            .groupBy(*join_keys)
-            .agg(F.max("value").alias("value"))
-        )
+    # merge grid and data through a union + max, not a join: a series
+    # column can hold NULL (a group-by tag value absent from a series, e.g.
+    # a not_key group under the linear-rate rewrite) and join equality
+    # never matches null keys, so the fill would replace REAL values. GROUP
+    # BY treats nulls as equal: exactly one non-null value exists per
+    # (series, ts), and max() ignores the grid row's null
+    key = [*series_cols, "ts"]
+    grid = (
+        buckets.select(*key, "value")
+        .unionByName(grid.withColumn("value", F.lit(None).cast("double")))
+        .groupBy(*key)
+        .agg(F.max("value").alias("value"))
+    )
     return grid.withColumn("value", F.coalesce(F.col("value"), fill_val))
 
 

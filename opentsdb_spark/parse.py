@@ -365,7 +365,7 @@ def parse_gexp(
         m = _GEXP_FN.match(e)
         if not m or (m.group(1) not in _GEXP_DISPATCH):
             sub = parse_m_subquery(e, timezone)
-            res = compile_subquery(points, sub, start_ms, end_ms, timezone)
+            res = compile_subquery(points, sub, start_ms, end_ms)
             cols = tuple(res.group_tagks)
             return res.df.select(*cols, "ts", "value"), cols
         name, argstr = m.group(1), m.group(2)

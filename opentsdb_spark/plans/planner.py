@@ -155,7 +155,6 @@ def compile_subquery(
     q: SubQuery,
     start_ms: int,
     end_ms: int,
-    timezone: str = "UTC",
     rollup_cfg=None,
     agg_tag: bool = False,
     strict_none: bool = False,
@@ -330,7 +329,6 @@ def compile_histogram_subquery(
     q: SubQuery,
     start_ms: int,
     end_ms: int,
-    timezone: str = "UTC",
 ) -> CompiledSubQuery:
     """Histogram percentile / bucket sub-query over a histogram frame
     (operators.histogram.HISTOGRAM_SCHEMA).
@@ -445,12 +443,12 @@ def compile_query(
                     "but no histogram frame was provided"
                 )
             out.append(
-                compile_histogram_subquery(histograms, q, start_ms, end_ms, tsq.timezone)
+                compile_histogram_subquery(histograms, q, start_ms, end_ms)
             )
         else:
             out.append(
                 compile_subquery(
-                    points, q, start_ms, end_ms, tsq.timezone,
+                    points, q, start_ms, end_ms,
                     rollup_cfg=rollup_cfg, agg_tag=agg_tag, strict_none=strict_none,
                     rollup_cutoff_ms=rollup_cutoff_ms,
                 )

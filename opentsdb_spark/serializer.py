@@ -13,9 +13,9 @@ runs two actions here: ``resolve_series`` (one row per matched series, from
 which the caller prices the budget and looks up annotations, and from which
 ``tags``/``aggregateTags``/TSUIDs are derived) and the one collect of the
 data plan. Over the TSD's served frame, which holds one partition for a
-base of one file split, each action is one Spark job with no shuffle; a
-zero-filled downsample adds one broadcast job for its fill join. Over a
-frame of several partitions, AQE adds a job per shuffle stage.
+base of one file split, each action is one Spark job with no shuffle or
+broadcast, a zero-filled downsample included. Over a frame of several
+partitions, AQE adds a job per shuffle stage.
 """
 
 from __future__ import annotations
@@ -42,10 +42,13 @@ class Series(NamedTuple):
 def resolve_series(source_df: DataFrame) -> list[Series]:
     """The matched series of a sub-query's filtered pre-aggregation frame:
     one small aggregate job, so every per-series fact of the request (scan
-    budget, aggregateTags, TSUIDs, annotation matches) comes from one pass."""
+    budget, aggregateTags, TSUIDs, annotation matches) comes from one pass.
+    It groups on the series' own columns (maps with the same entries in
+    any order are one key) and formats each TSUID once per series."""
     rows = (
-        source_df.groupBy("metric", series_id_col("metric", "tags").alias("tsuid"))
-        .agg(F.first("tags").alias("tags"), F.count("*").alias("points"))
+        source_df.groupBy("metric", "tags")
+        .agg(F.count("*").alias("points"))
+        .select(series_id_col("metric", "tags").alias("tsuid"), "metric", "tags", "points")
         .collect()
     )
     return [Series(r["tsuid"], r["metric"], dict(r["tags"] or {}), r["points"])
@@ -123,23 +126,23 @@ def serialize_subquery(
     nk = len(key_cols)
     rows.sort(key=lambda r: (*_spark_order(r[:nk]), r[nk + 1]))
     groups = {}
-    if not none and result.source_df is not None:
+    if result.source_df is not None:
         if series is None:
             series = resolve_series(result.source_df)
-        groups = _output_groups(series, result.group_tagks)
+        if none:
+            # one output series == one source series, keyed by its TSUID:
+            # its own full tag map, nothing aggregated
+            groups = {(s.tsuid,): (dict(sorted(s.tags.items())), [], [s.tsuid])
+                      for s in series}
+        else:
+            groups = _output_groups(series, result.group_tagks)
     out: list[dict[str, Any]] = []
     cur_key: tuple | None = None
     cur: dict[str, Any] | None = None
     for r in rows:
         key, metric, t, value = r[:nk], r[nk], r[nk + 1], r[nk + 2]
         if key != cur_key:
-            if none:
-                # one output series == one source series: its own full tag
-                # map, nothing aggregated (the group columns were never
-                # selected on this path — parse the canonical series id)
-                tags, atags, series_tsuids = _tags_from_series_id(key[0]), [], [key[0]]
-            else:
-                tags, atags, series_tsuids = groups.get(key, ({}, [], []))
+            tags, atags, series_tsuids = groups.get(key, ({}, [], []))
             cur = {"metric": metric, "tags": tags, "aggregateTags": atags, "dps": {}}
             if query_echo is not None:
                 cur["query"] = query_echo
@@ -157,14 +160,6 @@ def serialize_subquery(
         assert cur is not None
         cur["dps"][str(t if ms_resolution else t // 1000)] = value
     return out
-
-
-def _tags_from_series_id(sid: str) -> dict[str, str]:
-    """Invert sources.points.series_id_col: 'metric{k=v,k=v}' -> tag map."""
-    if "{" not in sid:
-        return {}
-    body = sid[sid.index("{") + 1 : sid.rindex("}")]
-    return dict(p.split("=", 1) for p in body.split(",") if "=" in p)
 
 
 def subquery_echo(q) -> dict[str, Any]:

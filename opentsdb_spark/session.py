@@ -89,12 +89,8 @@ def arrow_df(spark: SparkSession, table, schema=None) -> DataFrame:
     collecting or counting it submits no Spark job and starts no Python
     worker, and a plan reading it never re-derives its rows. Use it for
     data that is already materialized in Arrow (a ``DataFrame.toArrow()``
-    result, the TSD memtable) and for empty frames (:func:`empty_df`).
-    The table stays reachable as ``.arrow`` so a holder can concatenate
-    batches without collecting them back from the JVM."""
-    df = spark.createDataFrame(table, schema)
-    df.arrow = table
-    return df
+    result, the TSD memtable) and for empty frames (:func:`empty_df`)."""
+    return spark.createDataFrame(table, schema)
 
 
 def empty_df(spark: SparkSession, schema) -> DataFrame:

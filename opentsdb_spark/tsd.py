@@ -240,11 +240,11 @@ class TSD:
         return self.status
 
     # ------------------------------------------------------------ writes
-    def _absorb(self, frame: DataFrame) -> None:
-        """Append one materialized put batch (a ``session.arrow_df`` frame)
-        to the memtable; every ``_CHECKPOINT_EVERY`` writes fold it into the
-        delta (caller holds the lock)."""
-        self._memtable.append(frame.arrow)
+    def _absorb(self, table: pa.Table) -> None:
+        """Append one materialized put batch (an Arrow table in the put
+        schema) to the memtable; every ``_CHECKPOINT_EVERY`` writes fold it
+        into the delta (caller holds the lock)."""
+        self._memtable.append(table)
         self._writes += 1
         if self._writes % _CHECKPOINT_EVERY == 0:
             self._fold()
@@ -275,9 +275,7 @@ class TSD:
     def _memtable_df(self) -> DataFrame | None:
         if not self._memtable:
             return None
-        # telnet batches lack value_long: promotion null-fills it
-        return arrow_df(self.spark, pa.concat_tables(
-            self._memtable, promote_options="default"))
+        return arrow_df(self.spark, pa.concat_tables(self._memtable))
 
     def _serve(self) -> None:
         """Rebuild the served frame (base ∪ delta ∪ memtable).coalesce(n):
@@ -309,9 +307,9 @@ class TSD:
         pts = apply_ingest_filters(parse_put_lines(ldf))
         # the batch depends only on these lines — materialize it OUTSIDE
         # the lock so a big telnet flush doesn't stall every other request
-        table = pts.select("metric", "ts", "value", "tags").toArrow()
+        table = pts.toArrow()
         with self.lock:
-            self._absorb(arrow_df(self.spark, table))
+            self._absorb(table)
         return {"success": table.num_rows, "failed": len(lines) - table.num_rows}
 
     def rollup_lines(self, lines: list[str]) -> dict[str, int]:
@@ -804,9 +802,9 @@ class TSD:
             req["type"] = stype
             return api.handle_search(points, req, annotations=annotations), None
         if ep == "put":
-            resp, frame = api.handle_put(self.spark, body, request)
+            resp, table = api.handle_put(self.spark, body, request)
             with self.lock:
-                self._absorb(frame)
+                self._absorb(table)
             # bare ?summary / ?details flags count as present (reference
             # PutDataPointRpc.java query-param handling)
             if "summary" in request or "details" in request:

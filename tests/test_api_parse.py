@@ -276,6 +276,13 @@ def test_scan_budget_rejects_before_execution(spark, fixture_points):
     src = fixture_points.where(F.col("metric") == "sys.cpu.user")
     counts = [s.points for s in resolve_series(src)]
     assert sorted(counts) == [300, 300]
+    # two batches of one series, their tag maps in different key order,
+    # resolve to one series and one TSUID
+    host_dc = F.create_map(F.lit("host"), F.lit("web01"), F.lit("dc"), F.lit("lga"))
+    dc_host = F.create_map(F.lit("dc"), F.lit("lga"), F.lit("host"), F.lit("web01"))
+    [one] = resolve_series(src.limit(3).withColumn("tags", host_dc).unionByName(
+        src.limit(2).withColumn("tags", dc_host)))
+    assert (one.tsuid, one.points) == ("sys.cpu.user{dc=lga,host=web01}", 5)
     # 600 raw points, but a 1s fill=zero grid = 2 series x 864001 buckets
     with pytest.raises(QueryLimitExceeded, match="grid"):
         enforce_scan_budget(

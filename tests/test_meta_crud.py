@@ -342,10 +342,10 @@ def test_handle_put_details(spark):
         {"metric": "sys.cpu.user", "timestamp": EPOCH, "value": "2",
          "tags": {f"k{i}": "v" for i in range(9)}},
     ]
-    resp, points = handle_put(spark, body, {"details": True})
+    resp, table = handle_put(spark, body, {"details": True})
     assert resp["success"] == 1 and resp["failed"] == 3
     assert len(resp["errors"]) == 3
-    rows = points.collect()
+    rows = table.to_pylist()
     assert len(rows) == 1 and rows[0]["value"] == 42.5
 
 
@@ -661,11 +661,11 @@ def test_auth_plugin_surface(fixture_points, spark):
             api.handle_put(spark, {"metric": "m", "timestamp": EPOCH,
                                    "value": 1, "tags": {"h": "a"}},
                            request={"_headers": {}})
-        resp, frame = api.handle_put(
+        resp, table = api.handle_put(
             spark, {"metric": "m", "timestamp": EPOCH, "value": 1,
                     "tags": {"h": "a"}},
             request={"_headers": {"Authorization": "token ok"}})
-        assert resp["success"] == 1 and frame.count() == 1
+        assert resp["success"] == 1 and table.num_rows == 1
         # a front-end-supplied state short-circuits re-authentication
         pre = {"start": EPOCH, "end": EPOCH + 9000, "m": req["m"],
                "_auth_state": AuthState("bob", SUCCESS)}

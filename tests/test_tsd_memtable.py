@@ -138,6 +138,16 @@ def test_telnet_puts_share_the_memtable(spark, fixture_points):
     assert res == {"success": 2, "failed": 1}
     assert len(tsd._memtable) == 2 and _leaves(tsd.points) == 2
     assert _read(tsd, "mem.tel") == {**_sent([http]), EPOCH + 50: 7.0, EPOCH + 51: 9.0}
+    # one schema for both protocols: an integer point keeps its long value
+    # whichever protocol carried it
+    _put(tsd, [{"metric": "mem.int", "timestamp": EPOCH + 5, "value": 42,
+                "tags": {"host": "m1"}}])
+    tsd.put_lines([f"put mem.int {EPOCH + 5} 42 host=m1"])
+    http_int, telnet_int = tsd._memtable[2:]
+    assert telnet_int.schema == http_int.schema
+    assert telnet_int.to_pylist() == http_int.to_pylist()
+    rows = [r.asDict() for r in tsd.points.where("metric = 'mem.int'").collect()]
+    assert len(rows) == 2 and rows[0] == rows[1] and rows[0]["value_long"] == 42
 
 
 def test_default_annotation_lookup_runs_no_job(spark, fixture_points):

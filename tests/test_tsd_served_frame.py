@@ -3,7 +3,8 @@ construction, and kept at the partition count of the frame it was given.
 For a base of one file split that count is one, so every read of a
 dashboard panel plans with no shuffle Exchange and no file scan, before and
 after puts, folds, deletes and uid renames; /api/dropcaches cannot drop the
-store back to a parquet scan."""
+store back to a parquet scan. A zero fill merges by grouping on the
+series' own columns, so those panels plan no join and no broadcast."""
 
 import json
 import re
@@ -30,6 +31,7 @@ PANELS = (
     "sum:10m-sum:purchase{k=*}",  # lerp without fill: pack (Arrow map)
     "sum:1h-sum-zero:view{big=*}",  # linear-rate rewrite
     "p95:30m-max-zero:signup{k=wildcard(1*)}",  # percentile window
+    "max:1m-max-zero:error",  # series-level zero fill, grouped on the tags map
 )
 
 
@@ -72,15 +74,20 @@ def _assert_zero_exchange(spark, tsd, when):
     for m in PANELS:
         out, plans, jobs = _plans_and_jobs(spark, lambda: _query(tsd, m))
         assert out and plans, f"{m} {when}: no answer"
+        zero_fill = "-zero:" in m
         for plan in plans:
-            # a shuffle prints as "Exchange"; the zero-fill join's small
-            # side may still be a BroadcastExchange (one job, no shuffle)
+            # a shuffle prints as "Exchange", a broadcast as "BroadcastExchange"
             assert not re.search(r"\bExchange\b", plan), f"{m} {when}:\n{plan}"
             assert not _file_scans(plan), f"{m} {when}:\n{plan}"
+            if zero_fill:
+                # the fill merges grid and data by union + groupBy
+                assert "BroadcastExchange" not in plan, f"{m} {when}:\n{plan}"
+                assert "Join" not in plan, f"{m} {when}:\n{plan}"
         # the identity rule starts no Python worker; lerp still packs
         arrow_map = any("MapInArrow" in plan for plan in plans)
         assert arrow_map == m.startswith("sum:10m-sum"), f"{m} {when}:\n{plans}"
-        assert jobs <= 3, f"{m} {when}: {jobs} jobs"
+        # the series resolve and the data collect; nothing else for a fill
+        assert jobs <= (2 if zero_fill else 3), f"{m} {when}: {jobs} jobs"
 
 
 def _put(tsd, i, n=4):
@@ -88,7 +95,8 @@ def _put(tsd, i, n=4):
              "value": float(j), "tags": tags}
             for metric, tags in (("purchase", {"k": "3", "user": "u1"}),
                                  ("view", {"big": "1", "user": "u1"}),
-                                 ("signup", {"k": "12", "user": "u1"}))
+                                 ("signup", {"k": "12", "user": "u1"}),
+                                 ("error", {"k": "7", "user": "u1"}))
             for j in range(n)]
     out, _ = tsd.route("POST", "/api/put", {"summary": ""}, body)
     assert out["failed"] == 0
